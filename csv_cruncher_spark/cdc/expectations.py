@@ -17,13 +17,23 @@ satisfy, with a per-rule action:
   just "this batch never happened yet").
 
 Plan shape: all rules evaluate in ONE projection over the batch (each
-rule is a boolean column — pure JVM expressions, no Python), the
-violation counts come from ONE aggregation pass (``sum(cast(!ok))``
-per rule — map-side combined), and the routing filter reuses the same
-boolean columns, so the whole layer costs a single scan of the batch
-regardless of rule count. Rows violating several rules route by the
-SEVEREST action (fail > dlq > drop > warn) and every violated rule is
-named in the quarantine row's ``__viol`` array.
+rule is a boolean column — pure JVM expressions, no Python), and every
+count a batch needs comes from ONE aggregation pass over it
+(``violation_counts``, map-side combined): each rule's violations, the
+rows the routing sends to drop and to quarantine (the same severity
+predicates ``route`` filters on, as conditional counts), and — when the
+caller passes the parser's reject rows — the dead-letter count too.
+The routing filters reuse the same boolean columns, so the whole layer
+costs a single scan of the batch regardless of rule count. Rows
+violating several rules route by the SEVEREST action (fail > dlq >
+drop > warn) and every violated rule is named in the quarantine row's
+``__viol`` array.
+
+In ``CdcPipeline`` a warehouse-mode batch therefore runs, in order: the
+partial-update key collect (when placeholders are on), ONE counting
+aggregate over the persisted evaluated batch, the ``fail`` check (an
+abort writes nothing), the dead-letter and quarantine writes (each only
+when its count is non-zero), and the table write.
 
 Reference parity: csv-cruncher has no row-quality gating (bad rows
 flow into HSQLDB or abort the whole run on parse); this is new-engine
@@ -34,6 +44,7 @@ as one-pass Catalyst projections.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -145,18 +156,66 @@ def evaluate(df: DataFrame, rules: list[Expectation]) -> DataFrame:
     return out.withColumn("__viol", viol)
 
 
+class BatchCounts(NamedTuple):
+    """Everything ``violation_counts`` counts in its one pass."""
+
+    #: violations per rule name
+    rules: dict[str, int]
+    #: rows of the evaluated frame
+    rows: int
+    #: rows ``route`` sends to the dropped leg
+    dropped: int
+    #: rows ``route`` sends to the quarantined leg
+    quarantined: int
+    #: rows of the ``rejected`` frame (0 without one)
+    rejected: int
+
+
+def _routing(rules: list[Expectation]) -> tuple[Column, Column]:
+    """(violates a drop rule, violates a dlq or fail rule) — the severity
+    predicates shared by ``route`` and ``violation_counts``."""
+
+    def _any_violated(action_set):
+        out = F.lit(False)
+        for r in rules:
+            if r.action in action_set:
+                out = out | ~F.col(_flag(r.name))
+        return out
+
+    return _any_violated({"drop"}), _any_violated({"dlq", "fail"})
+
+
 def violation_counts(
-    df: DataFrame, rules: list[Expectation]
-) -> tuple[dict[str, int], int]:
-    """(per-rule violation counts, total rows) in ONE aggregation pass."""
-    aggs = [
-        F.sum((~F.col(_flag(r.name))).cast("long")).alias(r.name)
-        for r in rules
-    ] + [F.count(F.lit(1)).alias("__n")]
-    row = df.agg(*aggs).collect()[0]
-    d = row.asDict()
-    n = d.pop("__n")
-    return {k: int(v or 0) for k, v in d.items()}, int(n)
+    df: DataFrame, rules: list[Expectation], rejected: DataFrame | None = None
+) -> BatchCounts:
+    """Per-rule violations, evaluated rows, and the rows ``route`` drops
+    and quarantines, in ONE aggregation pass over an ``evaluate``-d frame.
+    ``rejected`` (rows the parser already dead-lettered) is unioned in
+    with passing flags, so its row count rides the same pass without
+    touching any other count."""
+    flags = [_flag(r.name) for r in rules]
+    rows = df.select(*flags, F.lit(False).alias("__rej"))
+    if rejected is not None:
+        rows = rows.unionByName(
+            rejected.select(
+                *[F.lit(True).alias(f) for f in flags], F.lit(True).alias("__rej")
+            )
+        )
+    v_drop, v_dlq = _routing(rules)
+    aggs = [F.count_if(~F.col(f)).alias(r.name) for f, r in zip(flags, rules)] + [
+        F.count_if(~F.col("__rej")).alias("__n"),
+        F.count_if(v_drop & ~v_dlq).alias("__dropped"),
+        F.count_if(v_dlq).alias("__quarantined"),
+        F.count_if(F.col("__rej")).alias("__rejected"),
+    ]
+    d = rows.agg(*aggs).collect()[0].asDict()
+    return BatchCounts(
+        rules={r.name: int(d[r.name]) for r in rules},
+        rows=int(d["__n"]),
+        dropped=int(d["__dropped"]),
+        quarantined=int(d["__quarantined"]),
+        rejected=int(d["__rejected"]),
+    )
 
 
 def route(
@@ -167,20 +226,7 @@ def route(
     returned frames keep the original columns plus ``__viol`` on the
     two violation legs."""
     flags = [_flag(r.name) for r in rules]
-    by_action = {
-        a: [r for r in rules if r.action == a] for a in ACTIONS
-    }
-
-    def _any_violated(rs):
-        if not rs:
-            return F.lit(False)
-        out = F.lit(False)
-        for r in rs:
-            out = out | ~F.col(_flag(r.name))
-        return out
-
-    v_drop = _any_violated(by_action["drop"])
-    v_dlq = _any_violated(by_action["dlq"]) | _any_violated(by_action["fail"])
+    v_drop, v_dlq = _routing(rules)
     passed = df.filter(~v_drop & ~v_dlq).drop("__viol", *flags)
     dropped = df.filter(v_drop & ~v_dlq).drop(*flags)
     quarantined = df.filter(v_dlq).drop(*flags)

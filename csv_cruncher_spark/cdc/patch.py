@@ -47,6 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..lake.table import bucket_expr
+
 #: Debezium's spelling; callers may use any sentinel
 DEBEZIUM_PLACEHOLDER = "__debezium_unavailable_value"
 
@@ -198,13 +200,22 @@ def resolve_against_table(
     # keys whose EARLIEST event carries a placeholder can need state;
     # a coarse but cheap superset: any key with a placeholder row
     need_df = batch.filter(any_ph).select(key_col).distinct()
-    head = need_df.limit(collect_keys_limit + 1).collect()
+    snap = table.snapshot()
+    # each key's bucket id rides the same collect, so the point lookup
+    # needs no job of its own to find the buckets it prunes to
+    head = (
+        need_df.select(key_col, bucket_expr(key_col, snap["n_buckets"]))
+        .limit(collect_keys_limit + 1)
+        .collect()
+    )
     if not head:
         return batch
     if len(head) <= collect_keys_limit:
-        state = table.read_keys(spark, [r[0] for r in head])
+        state = table.read_keys(
+            spark, [r[0] for r in head], sorted({r[1] for r in head}), snap=snap
+        )
     else:
-        state = table.read(spark).join(
+        state = table.read(spark, snap=snap).join(
             need_df, on=key_col, how="left_semi"
         )
     return resolve_partial_updates(

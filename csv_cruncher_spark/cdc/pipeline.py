@@ -164,7 +164,29 @@ _EVENT_META_COLS = {"op", "row_idx"}
 
 
 class CdcPipeline:
-    """Replay a change log into a LakeTable with exactly-once commits."""
+    """Replay a change log into a LakeTable with exactly-once commits.
+
+    Per batch, the Spark actions run in this order, and each only when
+    its feature is on:
+
+    1. the CSV header read (``read_change_batch``). The parsed batch is
+       persisted with ``on_malformed='dlq'``, the evaluated batch with
+       expectations, so later actions do not rescan the source;
+    2. ``partial_updates``: one collect of the placeholder keys with their
+       bucket ids, then the bucket-pruned point lookup, which scans with
+       the manifest schema and so runs no footer-inference job;
+    3. ONE counting aggregate (``expectations.violation_counts``) over the
+       persisted evaluated batch: every rule's violations, the dropped and
+       quarantined rows, and the parser's reject rows. With
+       ``on_malformed='dlq'`` and no expectations this is a plain count of
+       the reject rows;
+    4. a ``fail`` rule with violations aborts here, before anything is
+       written;
+    5. the dead-letter write (``dlq/<batch_id>``) and the quarantine write
+       (``dlq/<batch_id>.expect``), each only when its count is non-zero;
+    6. the table write (MOR delta or COW merge), then a compaction when a
+       trigger fires, the snapshot commit and the checkpoint.
+    """
 
     def __init__(
         self,
@@ -331,27 +353,24 @@ class CdcPipeline:
         self, spark: SparkSession, table: LakeTable, path: str, batch_id: str, ckpt: dict
     ) -> None:
         rejected = 0
-        parsed = None
+        parsed = bad = None
         if self.on_malformed == "dlq":
-            # persist the parsed batch: the quarantine write, its count,
-            # and the apply below would otherwise each rescan the source
+            # persist the parsed batch: the reject count, the quarantine
+            # write and the apply below would otherwise each rescan the
+            # source
             parsed = read_change_batch(spark, path, with_reject_reason=True).persist()
             bad = parsed.filter(F.col("__reject").isNotNull()).withColumnRenamed(
                 "__ts_raw", "warc_ts_raw"
             )
-            rejected = bad.count()
-            if rejected:
-                bad.write.mode("overwrite").parquet(
-                    os.path.join(self.table_path, "dlq", batch_id)
-                )
             df = parsed.filter(F.col("__reject").isNull()).drop(
                 "__reject", "__ts_raw"
             )
         else:
             df = read_change_batch(spark, path)
+        meta = batch_meta(path)
+        renames = meta.get("renames") or {}
 
-        expect_counts: dict[str, int] | None = None
-        expect_dropped = expect_quarantined = 0
+        counts = None
         ev = None
         if self.partial_updates:
             # resolve sparse events BEFORE the quality gate: a payload
@@ -372,27 +391,45 @@ class CdcPipeline:
                 violation_counts,
             )
 
-            # one evaluated+persisted frame serves the count aggregation,
+            # rules are written against the column names the operator
+            # knows: a renamed column still answers to its pre-rename
+            # name, for evaluation only
+            shadow = _pre_rename_aliases(table, renames, df.columns)
+            # one evaluated+persisted frame serves the counting aggregate,
             # the routing filters, and the apply below — the batch source
-            # is scanned once
-            ev = evaluate(df, self.expectations).persist()
-            expect_counts, _n = violation_counts(ev, self.expectations)
+            # is scanned once. The aggregate also counts the parser's
+            # reject rows, so the batch runs one counting action in all.
+            ev = (
+                evaluate(
+                    df.select("*", *[F.col(n).alias(o) for o, n in shadow.items()]),
+                    self.expectations,
+                )
+                .drop(*shadow)
+                .persist()
+            )
+            counts = violation_counts(ev, self.expectations, rejected=bad)
+            rejected = counts.rejected
             fail_counts = {
-                r.name: expect_counts[r.name]
+                r.name: counts.rules[r.name]
                 for r in self.expectations
-                if r.action == "fail" and expect_counts[r.name]
+                if r.action == "fail" and counts.rules[r.name]
             }
             if fail_counts:
                 ev.unpersist()
                 if parsed is not None:
                     parsed.unpersist()
-                # nothing staged, nothing committed: the batch simply
-                # has not happened yet; a re-run retries it
+                # nothing staged, nothing written, nothing committed: the
+                # batch simply has not happened yet; a re-run retries it
                 raise ExpectationFailed(batch_id, fail_counts)
-            passed, dropped, quarantined = route(ev, self.expectations)
-            expect_dropped = dropped.count()
-            expect_quarantined = quarantined.count()
-            if expect_quarantined:
+        elif bad is not None:
+            rejected = bad.count()
+        if rejected:
+            bad.write.mode("overwrite").parquet(
+                os.path.join(self.table_path, "dlq", batch_id)
+            )
+        if counts is not None:
+            passed, _dropped, quarantined = route(ev, self.expectations)
+            if counts.quarantined:
                 quarantined.withColumn(
                     "__reject",
                     F.concat(
@@ -402,11 +439,9 @@ class CdcPipeline:
                     os.path.join(self.table_path, "dlq", batch_id + ".expect")
                 )
             df = passed
-        meta = batch_meta(path)
 
         # --- schema evolution in lockstep with the stream ---
         snap = table.snapshot()
-        renames = meta.get("renames") or {}
         cur_names = {f["name"] for f in table.current_fields(snap)}
         batch_extra = [
             c for c in df.columns if c not in cur_names and c not in _EVENT_META_COLS
@@ -486,18 +521,40 @@ class CdcPipeline:
             rej = dict(ckpt.get("rejected_rows", {}))
             rej[batch_id] = rejected
             ckpt["rejected_rows"] = rej
-        if expect_counts is not None:
+        if counts is not None:
             exp = dict(ckpt.get("expectation_violations", {}))
             exp[batch_id] = {
-                "rules": expect_counts,
-                "dropped": expect_dropped,
-                "quarantined": expect_quarantined,
+                "rules": counts.rules,
+                "dropped": counts.dropped,
+                "quarantined": counts.quarantined,
             }
             ckpt["expectation_violations"] = exp
         ckpt["per_partition"] = per_part
         ckpt["lineage"] = new_snap["lineage"]
         ckpt["schema_version"] = new_snap["schema_version"]
         self._write_checkpoint(ckpt)
+
+
+def _pre_rename_aliases(
+    table: LakeTable, renames: dict[str, str], cols: list[str]
+) -> dict[str, str]:
+    """Earlier name -> batch column, for each batch column that had another
+    name before: renamed by this batch's sidecar (not applied yet), or by
+    an earlier batch's (an earlier schema version gave the field id
+    another name; later batches need not carry the sidecar). An earlier
+    name a current column took over is not aliased."""
+    snap = table.snapshot()
+    cur = {f["id"]: f["name"] for f in table.current_fields(snap)}
+    cur_names = set(cur.values())
+    prior = dict(renames)
+    for fields in snap["schemas"].values():
+        for f in fields:
+            new = cur.get(f["id"])
+            if new is not None and f["name"] != new and f["name"] not in cur_names:
+                prior.setdefault(f["name"], new)
+    return {
+        old: new for old, new in prior.items() if new in cols and old not in cols
+    }
 
 
 def _infer_lake_type(dt: T.DataType) -> str:

@@ -47,11 +47,12 @@ it/OptionsCombinationsTest.kt:232-233).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..cdc.extract import extract_text_udf
-from .table import LakeTable, bucket_expr
+from .table import LakeTable, bucket_expr, spark_type
 
 
 def lww_winners(batch_df: DataFrame, key_col: str = "url") -> DataFrame:
@@ -73,6 +74,34 @@ def lww_winners(batch_df: DataFrame, key_col: str = "url") -> DataFrame:
 BROADCAST_WINNER_LIMIT = 2_000_000
 
 
+#: batch-column types a table column of the key type takes by a lossless cast
+_LOSSLESS_TO = {
+    T.LongType: (T.IntegerType, T.ShortType, T.ByteType),
+    T.IntegerType: (T.ShortType, T.ByteType),
+    T.DoubleType: (T.FloatType, T.IntegerType, T.ShortType, T.ByteType),
+    T.TimestampType: (T.DateType,),
+}
+
+
+def _as_table_type(df: DataFrame, c: str, type_name: str) -> Column:
+    """Batch column ``c`` in the type the table declares for it. Data
+    files carry the manifest's types exactly, because readers scan them
+    with the manifest schema instead of inferring it from a footer. A
+    batch value is therefore cast only where the cast is lossless; any
+    other mismatch (a JSON column first seen as long arriving as double,
+    a struct under a string column) fails the batch before a write."""
+    want = spark_type(type_name)
+    have = df.schema[c].dataType
+    if have == want:
+        return F.col(c)
+    if isinstance(have, T.NullType) or type(have) in _LOSSLESS_TO.get(type(want), ()):
+        return F.col(c).cast(want).alias(c)
+    raise TypeError(
+        f"batch column {c!r} is {have.simpleString()}, the table stores it as "
+        f"{type_name}; only a lossless widening is cast"
+    )
+
+
 def _winner_upsert_rows(
     winners_applied: DataFrame,
     key: str,
@@ -85,8 +114,6 @@ def _winner_upsert_rows(
     Arrow-batched pandas UDF). ``keep_op`` carries the op code through as
     ``__op`` (the MOR delta encoding); COW callers drop it. Shared by
     both merge families so the projection rules cannot diverge."""
-    from .table import spark_type
-
     data_cols = [f["name"] for f in cur_fields]
     type_by_name = {f["name"]: f["type"] for f in cur_fields}
     have = set(winners_applied.columns)
@@ -95,7 +122,7 @@ def _winner_upsert_rows(
         if c == key or c == "text":
             continue
         if c in have and c not in ("op", "row_idx"):
-            sel.append(F.col(c))
+            sel.append(_as_table_type(winners_applied, c, type_by_name[c]))
         else:
             sel.append(F.lit(None).cast(spark_type(type_by_name[c])).alias(c))
     extra = [F.col("op").alias("__op")] if keep_op else []

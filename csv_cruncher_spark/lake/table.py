@@ -66,6 +66,13 @@ _TYPE_MAP: dict[str, T.DataType] = {
 }
 
 
+#: the columns a merge-on-read delta file carries after the table's own
+_DELTA_FIELDS = (
+    T.StructField("__op", T.StringType()),
+    T.StructField("__epoch", T.LongType()),
+)
+
+
 def spark_type(name: str) -> T.DataType:
     if name.startswith("decimal"):
         p, s = name[name.index("(") + 1 : -1].split(",")
@@ -206,35 +213,23 @@ class LakeTable:
         return self.catalog.load_snapshot(ptr)
 
     def read_keys(
-        self, spark: SparkSession, keys: list[str], snap: dict | None = None
+        self,
+        spark: SparkSession,
+        keys: list[str],
+        buckets: list[int],
+        snap: dict | None = None,
     ) -> DataFrame:
-        """Point lookup: current rows for specific keys. The bucket of a
-        key is derivable driver-side (same xxhash the writer used), so
-        the scan touches only the buckets the keys hash into — at 4096
-        buckets a 10-url lookup reads ≤10/4096 of the table, deltas
-        included, before the usual read-time resolution."""
+        """Point lookup: current rows for specific keys. ``buckets`` are
+        the bucket ids the keys hash into, collected together with the
+        keys (``bucket_expr``, the writer's own xxhash), so the scan
+        touches only those buckets — at 4096 buckets a 10-url lookup
+        reads ≤10/4096 of the table, deltas included, before the usual
+        read-time resolution."""
         snap = snap or self.snapshot()
         # the key predicate is applied BEFORE resolution (pushed into the
         # parquet scans as an In filter), so the fold replays only the
         # looked-up keys' events — not every key in the touched buckets
-        return self.read(
-            spark,
-            snap=snap,
-            buckets=self._buckets_for_keys(spark, snap, keys),
-            keys=keys,
-        )
-
-    def _buckets_for_keys(self, spark: SparkSession, snap: dict, keys: list) -> list[int]:
-        """Bucket ids a key list hashes into, derived driver-side with the
-        same JVM xxhash the writer used — prunes the scan to those
-        buckets' files."""
-        kdf = spark.createDataFrame([(k,) for k in keys], f"{snap['key_col']}: string")
-        return sorted(
-            r["b"]
-            for r in kdf.select(bucket_expr(snap["key_col"], snap["n_buckets"]).alias("b"))
-            .distinct()
-            .collect()
-        )
+        return self.read(spark, snap=snap, buckets=buckets, keys=keys)
 
     def changes_between(
         self,
@@ -387,19 +382,23 @@ class LakeTable:
                 self._scan(spark, snap_to, range_files).select(key).distinct()
             )
             # one job decides the path: fetch limit+1 rows, keep them if
-            # small. On the large-key DataFrame path the touched subtree
-            # (range delta scan + distinct) is recomputed per endpoint
-            # read; deliberately NOT persist()ed — the returned DataFrame
-            # is lazy, so there is no sound place to unpersist, and the
-            # recomputed subtree scans only the range's (batch-sized)
-            # delta files
-            head = touched.limit(self.FEED_COLLECT_KEYS_LIMIT + 1).collect()
+            # small, each with its bucket id. On the large-key DataFrame
+            # path the touched subtree (range delta scan + distinct) is
+            # recomputed per endpoint read; deliberately NOT persist()ed —
+            # the returned DataFrame is lazy, so there is no sound place
+            # to unpersist, and the recomputed subtree scans only the
+            # range's (batch-sized) delta files
+            head = (
+                touched.select(key, bucket_expr(key, snap_to["n_buckets"]))
+                .limit(self.FEED_COLLECT_KEYS_LIMIT + 1)
+                .collect()
+            )
             if len(head) <= self.FEED_COLLECT_KEYS_LIMIT:
                 # list path: parquet In/range pushdown prunes row groups
-                # (files are key-sorted) and the touched buckets are
-                # derived driver-side — scan I/O shrinks with the key set
+                # (files are key-sorted) and the scans prune to the
+                # touched buckets — scan I/O shrinks with the key set
                 touched = [r[0] for r in head]
-                buckets_arg = self._buckets_for_keys(spark, snap_to, touched)
+                buckets_arg = sorted({r[1] for r in head})
 
         post = self.read(
             spark, snap=snap_to, buckets=buckets_arg, keys=touched
@@ -650,12 +649,14 @@ class LakeTable:
         spark: SparkSession,
         snap: dict,
         files: list[dict],
-        extra_cols: list[str] = (),
+        delta_cols: bool = False,
     ) -> DataFrame | None:
         """Scan a file list projected to the current schema (field-id
         mapping per schema version; at most #schema-versions scans).
-        ``extra_cols`` are physical columns passed through verbatim
-        (the delta files' __op/__epoch)."""
+        Each version's physical schema comes from the manifest, so Spark
+        never opens a footer to infer it (that inference is a job per
+        scan). ``delta_cols`` passes the delta files' ``__op``/``__epoch``
+        through verbatim."""
         if not files:
             return None
         cur_fields = self.current_fields(snap)
@@ -664,19 +665,24 @@ class LakeTable:
             by_ver.setdefault(f["schema_version"], []).append(
                 os.path.join(self.path, f["path"])
             )
+        extra = list(_DELTA_FIELDS) if delta_cols else []
         parts: list[DataFrame] = []
         for ver, paths in by_ver.items():
             ver_fields = snap["schemas"][str(ver)]
             phys_by_id = {f["id"]: f["name"] for f in ver_fields}
-            df = spark.read.parquet(*paths)
+            physical = T.StructType(
+                [T.StructField(f["name"], spark_type(f["type"])) for f in ver_fields]
+                + extra
+            )
+            df = spark.read.schema(physical).parquet(*paths)
             cols = []
             for f in cur_fields:
                 phys = phys_by_id.get(f["id"])
-                if phys is not None and phys in df.columns:
+                if phys is not None:
                     cols.append(F.col(phys).alias(f["name"]))
                 else:
                     cols.append(F.lit(None).cast(spark_type(f["type"])).alias(f["name"]))
-            cols += [F.col(c) for c in extra_cols]
+            cols += [F.col(c.name) for c in extra]
             parts.append(df.select(*cols))
         out = parts[0]
         for p in parts[1:]:
@@ -777,7 +783,7 @@ class LakeTable:
         cur_fields = self.current_fields(snap)
         data_cols = [f["name"] for f in cur_fields]
         deltas = _keyed(
-            self._scan(spark, snap, delta_files, extra_cols=["__op", "__epoch"])
+            self._scan(spark, snap, delta_files, delta_cols=True)
         )
         key = snap["key_col"]
         vcol = snap.get("version_col", "warc_ts")

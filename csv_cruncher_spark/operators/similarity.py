@@ -419,7 +419,8 @@ def knn_join(
     pair compared) — the oracle mode; production tunes recall with
     ``n_probe``. Pass pre-trained ``centroids``/``assigned`` to amortize
     across calls. Self-pairs (same id) are excluded. Ties broken by
-    ascending right id. Zero-norm/null vectors never rank (null cosine).
+    ascending right id. Zero-norm/null/NaN-element vectors never rank
+    (null cosine).
 
     Returns (id_l, id_r, cosine, rank)."""
     from pyspark.sql.window import Window
@@ -435,10 +436,10 @@ def knn_join(
         # right id instead (uniform equi-join keys, same join shape and
         # the same one-cell-per-right-row pair-uniqueness argument); the
         # left side probes the constant full cell list. Null/zero-norm/
-        # mismatched vectors still never rank: they reach the join but
-        # their cosine is NULL (guarded denominator / fold fallback) and
-        # the isNotNull filter below drops them — the same rows the
-        # trained path drops at assignment time. Pinned against the
+        # mismatched/NaN-element vectors still never rank: they reach the
+        # join but their cosine is NULL (guarded denominator / fold
+        # fallback) and the isNotNull filter below drops them — the same
+        # rows the trained path drops at assignment time. Pinned against the
         # trained path by test_knn_exact_fastpath_matches_trained.
         try:
             dim = _infer_dim(right, vec_r)
@@ -504,7 +505,10 @@ def knn_join(
     cand = l_probed.join(r_side, "__cell").filter(F.col("__il") != F.col("__ir"))
     dot = F.expr(_dot_unrolled("_lv", "_rv", dim))
     denom = F.col("__nl") * F.col("__nr")
-    sim = F.when(denom > 0, dot / denom)
+    # a NaN element on either side makes its norm NaN, and Spark orders
+    # NaN above every number — ``NaN > 0`` alone let a NaN right row rank
+    # first for every left row. Such pairs get no cosine, like zero norms
+    sim = F.when((denom > 0) & ~F.isnan(denom), dot / denom)
     # no pair-dedup needed: every right row lives in exactly ONE cell
     # (ivf_assign is a function of the vector), so a (left, right) pair
     # can only arise from that one cell — the join output is pair-unique

@@ -8,6 +8,7 @@ import base64
 import csv
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -59,9 +60,14 @@ def test_route_severest_action_and_null_violation(spark, frame):
 
 def test_violation_counts_and_report(spark, frame):
     ev = evaluate(frame, RULES)
-    counts, n = violation_counts(ev, RULES)
-    assert n == 6
-    assert counts == {"url_https": 2, "lang_known": 3, "text_short": 1}
+    c = violation_counts(ev, RULES)
+    assert c.rows == 6
+    assert c.rules == {"url_https": 2, "lang_known": 3, "text_short": 1}
+    # the routing legs are counted in the same pass, by route()'s rule
+    passed, dropped, quarantined = route(ev, RULES)
+    assert (c.dropped, c.quarantined, c.rejected) == (
+        dropped.count(), quarantined.count(), 0
+    ) == (1, 3, 0)
     rep = expectations_report(frame, RULES).collect()
     assert [(r.rule, r.action, r.n_rows, r.n_violations, r.n_passed) for r in rep] == [
         ("url_https", "drop", 6, 2, 4),
@@ -226,3 +232,152 @@ def test_tailer_enforces_expectations(spark, tmp_path):
 def test_pipeline_rejects_non_expectation():
     with pytest.raises(TypeError):
         CdcPipeline("/tmp/x", expectations=["url IS NOT NULL"])
+
+
+def test_pipeline_fail_abort_writes_nothing(spark, tmp_path):
+    """A batch that trips a ``fail`` rule has not happened: no dead-letter
+    rows of the parser, no quarantined rows of other rules, and the
+    checkpoint and snapshot stay as they were — even though the batch
+    also carries rows that would have gone to both."""
+    bdir = str(tmp_path / "batches")
+    _write_batch(bdir, 0, [_row(url="https://x.example/ok")])
+    _write_batch(bdir, 1, [
+        _row(url="https://x.example/a"),
+        _row(url=""),                                  # parser dead-letter
+        _row(url="https://x.example/z", lang="zz"),    # dlq rule
+        _row(url="http://bad.example/1"),              # fail rule
+    ])
+    tpath = str(tmp_path / "lake")
+    rules = [
+        Expectation("https_only", "url LIKE 'https://%'", action="fail"),
+        Expectation("lang_known", "lang IN ('en','de')", action="dlq"),
+    ]
+    pipe = CdcPipeline(tpath, n_buckets=2, on_malformed="dlq", expectations=rules)
+    pipe.run(spark, bdir, max_batches=1)
+    with open(pipe.checkpoint_path, "rb") as f:
+        ckpt_before = f.read()
+    snap_before = LakeTable.load(tpath).snapshot()["snapshot_id"]
+    with pytest.raises(ExpectationFailed):
+        pipe.run(spark, bdir)
+    assert not os.path.exists(os.path.join(tpath, "dlq", "batch-00001.csv"))
+    assert not os.path.exists(os.path.join(tpath, "dlq", "batch-00001.csv.expect"))
+    with open(pipe.checkpoint_path, "rb") as f:
+        assert f.read() == ckpt_before
+    assert LakeTable.load(tpath).snapshot()["snapshot_id"] == snap_before
+
+
+def test_rules_resolve_across_sidecar_renames(spark, tmp_path):
+    """A rule names ``lang``; from batch 2 on the log renames it to
+    ``language``. Only batch 2 carries the sidecar ``.meta.json``: later
+    batches arrive under the new name after the table applied the
+    rename. The rule still sees the column under its pre-rename name,
+    every batch applies, and each batch's counts equal a plain Python
+    count over its CSV."""
+    from csv_cruncher_spark.cdc.fixtures import ChangeLogSpec, generate_change_log
+
+    bdir = str(tmp_path / "batches")
+    paths = generate_change_log(ChangeLogSpec(
+        n_urls=60, n_batches=4, events_per_batch=40, seed=7,
+        schema_v2_from_batch=1, schema_v3_from_batch=2, out_dir=bdir,
+    ))
+    os.remove(paths[3] + ".meta.json")
+    known = ("en", "de", "cs")
+    rules = [Expectation("lang_known", f"lang IN {known}", action="drop",
+                         applies_to=("I", "U"))]
+    tpath = str(tmp_path / "lake")
+    ckpt = CdcPipeline(tpath, n_buckets=2, expectations=rules).run(spark, bdir)
+    ids = [os.path.basename(p) for p in paths]
+    assert ckpt["batches_applied"] == ids
+    for p, bid in zip(paths, ids):
+        with open(p, newline="") as f:
+            rows = list(csv.DictReader(f))
+        lang_col = "language" if "language" in rows[0] else "lang"
+        want = sum(
+            1 for r in rows if r["op"] in ("I", "U") and r[lang_col] not in known
+        )
+        assert want > 0
+        assert ckpt["expectation_violations"][bid] == {
+            "rules": {"lang_known": want}, "dropped": want, "quarantined": 0,
+        }
+    # the table carries the renamed column only; the alias never lands
+    cols = LakeTable.load(tpath).read(spark).columns
+    assert "language" in cols and "lang" not in cols
+
+
+# ---------- Spark job budget of one warehouse-mode batch ----------
+
+#: jobs one warehouse-mode batch may run (see the test's docstring)
+BATCH_JOB_BUDGET = 15
+
+
+def _jobs_of(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "one warehouse-mode batch")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warehouse_batch_job_budget(spark, tmp_path):
+    """Each Spark action a batch runs costs a job plus its driver-side
+    planning, which dominates the latency of small batches. Job counts
+    repeat exactly for the same code and input, so a fixed budget catches
+    an added action without any timing noise. The batch below exercises
+    every counting and lookup phase: parser dead-letters, a drop rule, a
+    dlq rule, a warn rule and a Debezium placeholder that resolves from
+    table state.
+
+    What the budget holds, per phase: the CSV header read; the placeholder
+    key collect (bucket ids ride along, and the point lookup scans with
+    the manifest schema, so neither needs a job of its own); ONE counting
+    aggregate over the evaluated batch (rule violations, dropped,
+    quarantined and parser rejects together, plus the jobs that
+    materialize the persisted frame); the dead-letter and quarantine
+    writes; the delta write."""
+    from csv_cruncher_spark.cdc.patch import DEBEZIUM_PLACEHOLDER as PH
+
+    bdir = str(tmp_path / "batches")
+    _write_batch(bdir, 0, [_row(url=f"https://x.example/{i}") for i in range(6)])
+    _write_batch(bdir, 1, [
+        {**_row(op="U", url="https://x.example/1", ts="2024-01-01 00:00:20"),
+         "html": base64.b64encode(PH.encode()).decode()},     # from table state
+        _row(url="https://x.example/9", ts="2024-01-01 00:00:20"),
+        _row(url=""),                                         # parser dead-letter
+        _row(url="http://x.example/plain"),                   # drop rule
+        _row(url="https://x.example/zz", lang="zz"),          # dlq rule
+    ])
+    tpath = str(tmp_path / "lake")
+    pipe = CdcPipeline(
+        tpath, n_buckets=4, on_malformed="dlq", partial_updates=PH,
+        expectations=[
+            Expectation("https_only", "url LIKE 'https://%'", action="drop"),
+            Expectation("lang_known", "lang IN ('en','de')", action="dlq",
+                        applies_to=("I", "U")),
+            Expectation("has_html", "html IS NOT NULL", action="warn",
+                        applies_to=("I", "U")),
+        ],
+    )
+    pipe.run(spark, bdir, max_batches=1)
+    jobs = _jobs_of(spark, lambda: pipe.run(spark, bdir, max_batches=1))
+
+    # the batch did all of its work: the budget is not met by skipping any
+    ckpt = pipe.load_checkpoint()
+    assert ckpt["batches_applied"] == ["batch-00000.csv", "batch-00001.csv"]
+    assert ckpt["rejected_rows"]["batch-00001.csv"] == 1
+    assert ckpt["expectation_violations"]["batch-00001.csv"] == {
+        "rules": {"https_only": 1, "lang_known": 1, "has_html": 0},
+        "dropped": 1,
+        "quarantined": 1,
+    }
+    assert os.path.isdir(os.path.join(tpath, "dlq", "batch-00001.csv"))
+    assert os.path.isdir(os.path.join(tpath, "dlq", "batch-00001.csv.expect"))
+    row = (
+        LakeTable.load(tpath).read(spark)
+        .filter("url = 'https://x.example/1'").collect()[0]
+    )
+    assert bytes(row.html) == b"<html><body>hello world page</body></html>"
+
+    assert jobs <= BATCH_JOB_BUDGET, f"{jobs} Spark jobs for one batch"

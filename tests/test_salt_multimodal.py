@@ -364,8 +364,10 @@ def test_knn_exact_fastpath_matches_trained(spark):
     k-means training — the cell partitioning cannot change which pairs
     are compared (all of them, each exactly once), so hash-of-id cells
     must yield BIT-identical output to the trained-centroid path,
-    including the degenerate rows (null vector, zero norm, wrong dim)
-    the trained path drops at assignment time."""
+    including the degenerate rows (null vector, zero norm, wrong dim,
+    NaN element) the trained path drops at assignment time. A NaN right
+    row once ranked first for every left row on the fast path: Spark
+    orders NaN above every number, so ``NaN > 0`` let its cosine through."""
     import os as _os
 
     from csv_cruncher_spark.operators import similarity
@@ -380,9 +382,11 @@ def test_knn_exact_fastpath_matches_trained(spark):
             (10_000_001, None),                # null vector
             (10_000_002, [0.0] * 64),          # zero norm
             (10_000_003, [1.0, 2.0]),          # wrong dim
+            (10_000_004, [float("nan")] + [1.0] * 63),  # NaN element
         ],
         "id: bigint, embedding: array<double>",
     )
+    bad = {10_000_001, 10_000_002, 10_000_003, 10_000_004}
     right = emb.limit(200).unionByName(degenerate)
     left = emb.filter(F.col("id") % 25 == 0).select(
         F.col("id").alias("id_l"), "embedding"
@@ -393,8 +397,12 @@ def test_knn_exact_fastpath_matches_trained(spark):
         left, r_named, "id_l", "id_r", "embedding", "embedding",
         k=5, n_centroids=8, n_probe=8,
     ).collect()
-    # force the legacy trained path by passing pre-trained centroids
-    cents = similarity.ivf_train_centroids(r_named, "embedding", n_centroids=8)
+    # force the legacy trained path by passing pre-trained centroids,
+    # trained without the NaN row: a NaN vector in training makes a NaN
+    # centroid, which is not what this test is about
+    cents = similarity.ivf_train_centroids(
+        r_named.filter(F.col("id_r") != 10_000_004), "embedding", n_centroids=8
+    )
     trained = similarity.knn_join(
         left, r_named, "id_l", "id_r", "embedding", "embedding",
         k=5, n_centroids=8, n_probe=8, centroids=cents,
@@ -405,7 +413,6 @@ def test_knn_exact_fastpath_matches_trained(spark):
     trained_m = {key(r): (r["id_r"], r["cosine"]) for r in trained}
     assert fast_m == trained_m and len(fast) == len(trained)
     # degenerate left/right ids never appear on either side of a pair
-    bad = {10_000_001, 10_000_002, 10_000_003}
     assert not any(r["id_l"] in bad or r["id_r"] in bad for r in fast)
 
 

@@ -137,3 +137,33 @@ def test_identity_column_rename_rejected(spark, tmp_path):
         t.evolve_schema(renames={"warc_ts": "fetched_at"})
     with pytest.raises(ValueError, match="already exists"):
         t.evolve_schema(renames={"lang": "text"})
+
+
+def test_lossy_type_drift_fails_the_batch_before_any_write(spark, tmp_path):
+    """Data files carry the manifest's column types, because readers scan
+    them with the manifest schema. In a JSON log a column first added as
+    long may later arrive as double; casting 2.5 to 2 would lose data,
+    so that batch fails and leaves table and checkpoint as they were."""
+    import base64
+    import json
+
+    bdir = tmp_path / "b"
+    bdir.mkdir()
+
+    def batch(seq, score):
+        html = base64.b64encode(b"<html><body>p</body></html>").decode()
+        ev = {"op": "I", "url": "https://x.example/1",
+              "warc_ts": f"2024-01-01 00:00:{10 + seq}", "html": html,
+              "lang": "en", "score": score}
+        (bdir / f"batch-{seq:05d}.json").write_text(json.dumps(ev) + "\n")
+
+    batch(0, 3)
+    batch(1, 2.5)
+    tpath = str(tmp_path / "lake")
+    pipe = CdcPipeline(tpath, n_buckets=2)
+    with pytest.raises(TypeError, match="'score' is double.*long"):
+        pipe.run(spark, str(bdir))
+    ckpt = pipe.load_checkpoint()
+    assert ckpt["batches_applied"] == ["batch-00000.json"]
+    rows = LakeTable.load(tpath).read(spark).collect()
+    assert [(r.url, r.score) for r in rows] == [("https://x.example/1", 3)]

@@ -8,7 +8,7 @@ import os
 
 from csv_cruncher_spark.cdc.fixtures import ChangeLogSpec, generate_change_log, reference_fold
 from csv_cruncher_spark.cdc.pipeline import CdcPipeline
-from csv_cruncher_spark.lake.table import LakeTable
+from csv_cruncher_spark.lake.table import LakeTable, bucket_expr
 
 
 def _mk_log(tmp_path, n_batches=3, seed=31):
@@ -90,13 +90,17 @@ def test_read_keys_point_lookup(spark, tmp_path):
     t = LakeTable.load(p)
     want = reference_fold(paths)
     some = sorted(want)[:3] + ["https://nowhere.example.com/missing"]
-    got = {r["url"]: r["lang"] for r in t.read_keys(spark, some).collect()}
+    buckets = sorted({
+        r[0] for r in spark.createDataFrame([(u,) for u in some], "url string")
+        .select(bucket_expr("url", 8)).collect()
+    })
+    got = {r["url"]: r["lang"] for r in t.read_keys(spark, some, buckets).collect()}
     assert set(got) == set(some) - {"https://nowhere.example.com/missing"}
     for u in got:
         assert got[u] == want[u]["lang"]
     # the key predicate reaches the parquet scans (PushedFilters In),
     # so resolution folds only the looked-up keys, not whole buckets
-    plan = t.read_keys(spark, some)._jdf.queryExecution().toString()
+    plan = t.read_keys(spark, some, buckets)._jdf.queryExecution().toString()
     assert "PushedFilters" in plan and "In(url" in plan, plan
 
 
