@@ -21,6 +21,7 @@ epoch-split behavior (util/FilesUtils.kt:288-327) generalized from
 
 from __future__ import annotations
 
+import csv
 import json
 import os
 import uuid
@@ -29,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lake.merge import apply_batch
 from ..lake.table import LakeTable, _atomic_write_json
 from ..sources.discovery import filter_paths
 
@@ -68,7 +68,18 @@ def read_change_batch(
         # JSON-lines batches are split-parallel the same way
         raw = spark.read.json(path)
     else:
-        raw = spark.read.option("header", True).option("mode", "FAILFAST").csv(path)
+        # the header names the columns, all strings: read it here rather
+        # than let Spark run a job for it
+        with open(path, newline="", encoding="utf-8-sig") as f:
+            header = next(csv.reader(f), [])
+        raw = (
+            spark.read.schema(
+                T.StructType([T.StructField(c, T.StringType()) for c in header])
+            )
+            .option("header", True)
+            .option("mode", "FAILFAST")
+            .csv(path)
+        )
     cols = raw.columns
     local_counter = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
     df = raw.select(
@@ -79,7 +90,7 @@ def read_change_batch(
     )
     # try_to_timestamp: malformed warc_ts → NULL (ANSI to_timestamp would
     # kill the replay); a null-version event loses LWW to any non-null
-    # existing row — identical rule in all three merge strategies
+    # existing row — the same rule the MOR read fold applies
     df = df.withColumn("__ts_raw", F.col("warc_ts")).withColumn(
         "warc_ts", F.try_to_timestamp("warc_ts")
     )
@@ -169,9 +180,11 @@ class CdcPipeline:
     Per batch, the Spark actions run in this order, and each only when
     its feature is on:
 
-    1. the CSV header read (``read_change_batch``). The parsed batch is
-       persisted with ``on_malformed='dlq'``, the evaluated batch with
-       expectations, so later actions do not rescan the source;
+    1. none for the batch read: ``read_change_batch`` takes a CSV
+       batch's header from the file in Python, and the parse runs inside
+       the actions below. The parsed batch is persisted with
+       ``on_malformed='dlq'``, the evaluated batch with expectations, so
+       later actions do not rescan the source;
     2. ``partial_updates``: one collect of the placeholder keys with their
        bucket ids, then the bucket-pruned point lookup, which scans with
        the manifest schema and so runs no footer-inference job;
@@ -184,8 +197,8 @@ class CdcPipeline:
        written;
     5. the dead-letter write (``dlq/<batch_id>``) and the quarantine write
        (``dlq/<batch_id>.expect``), each only when its count is non-zero;
-    6. the table write (MOR delta or COW merge), then a compaction when a
-       trigger fires, the snapshot commit and the checkpoint.
+    6. the merge-on-read delta write and its snapshot commit, then a
+       compaction when a trigger fires, and the checkpoint.
     """
 
     def __init__(
@@ -193,8 +206,6 @@ class CdcPipeline:
         table_path: str,
         checkpoint_path: str | None = None,
         n_buckets: int = 16,
-        broadcast_winner_limit: int | None = None,
-        mode: str = "mor",
         compact_every: int = 16,
         compact_delta_bytes: int = 4 << 30,
         keep_snapshots: int | None = None,
@@ -203,15 +214,14 @@ class CdcPipeline:
         expectations=None,
         partial_updates: str | None = None,
     ):
-        """``mode='mor'`` (default): O(batch) delta appends with read-time
-        LWW resolution, auto-compacted every ``compact_every`` stacked
-        delta epochs OR when any single bucket accumulates
+        """Each batch is an O(batch) merge-on-read delta append with
+        read-time LWW resolution, auto-compacted every ``compact_every``
+        stacked delta epochs OR when any single bucket accumulates
         ``compact_delta_bytes`` of deltas (hot-key version pile-up —
         the bytes trigger compacts just the overloaded buckets).
-        ``mode='cow'``: eager copy-on-write merge per batch (the
-        compaction/bulk-load path). ``keep_snapshots``: if set, expire
-        older snapshots (and their orphaned files) after each compaction
-        — bounds on-disk history for long replays. ``catalog``: a
+        ``keep_snapshots``: if set, expire older snapshots (and their
+        orphaned files) after each compaction — bounds on-disk history
+        for long replays. ``catalog``: a
         :class:`~csv_cruncher_spark.lake.catalog.SnapshotCatalog` for the
         table's snapshot-pointer storage (default: local-FS flock+rename;
         pass a conditional-write catalog on object stores).
@@ -236,10 +246,6 @@ class CdcPipeline:
         from the table's current row via a bucket-pruned point lookup
         (O(batch), never a table scan) — see ``cdc/patch.py``. Binary
         columns carry the placeholder as their decoded bytes."""
-        from ..lake.merge import BROADCAST_WINNER_LIMIT
-
-        if mode not in ("mor", "cow"):
-            raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
         if on_malformed not in ("drop", "dlq"):
             raise ValueError(
                 f"on_malformed must be 'drop' or 'dlq', got {on_malformed!r}"
@@ -247,7 +253,6 @@ class CdcPipeline:
         self.table_path = table_path
         self.checkpoint_path = checkpoint_path or os.path.join(table_path, "checkpoint.json")
         self.n_buckets = n_buckets
-        self.mode = mode
         self.compact_every = compact_every
         self.compact_delta_bytes = compact_delta_bytes
         self.keep_snapshots = keep_snapshots
@@ -261,9 +266,6 @@ class CdcPipeline:
             for e in self.expectations:
                 if not isinstance(e, Expectation):
                     raise TypeError(f"expected Expectation, got {type(e)!r}")
-        self.broadcast_winner_limit = (
-            BROADCAST_WINNER_LIMIT if broadcast_winner_limit is None else broadcast_winner_limit
-        )
         # test hooks (SURVEY.md §7.5 trap 1)
         self.fail_after_data_write_on: set[str] = set()
         self.fail_before_checkpoint_on: set[str] = set()
@@ -460,43 +462,33 @@ class CdcPipeline:
             snap = table.evolve_schema(add_columns=add_cols, renames=effective_renames)
 
         epoch_id = snap["epoch_id"] + 1 if snap["epoch_id"] >= 0 else 0
-        if self.mode == "mor":
-            from ..lake.merge import apply_batch_mor
+        # looked up per call, so a wrapper installed on lake.merge (the
+        # per-layer tracer of perfbench/) sees every apply
+        from ..lake.merge import apply_batch_mor
 
-            new_snap = apply_batch_mor(
-                spark,
-                table,
-                df,
-                epoch_id=epoch_id,
-                batch_id=batch_id,
-                staged_snapshot=snap,
-                fail_after_data_write=batch_id in self.fail_after_data_write_on,
-            )
-            heavy = sorted(
-                b
-                for b, n in table.delta_bytes_per_bucket(new_snap).items()
-                if n >= self.compact_delta_bytes
-            )
-            if table.delta_epoch_depth(new_snap) >= self.compact_every:
-                new_snap = table.compact(spark)  # full fold on depth trigger
-            elif heavy:
-                # bytes trigger: bucket-pruned compaction of just the
-                # overloaded buckets (hot-key version pile-up; cost is
-                # proportional to the touched slices, not the table)
-                new_snap = table.compact(spark, buckets=heavy)
-            if new_snap.get("batch_id") is None and self.keep_snapshots is not None:
-                table.expire_snapshots(keep_last=self.keep_snapshots)
-        else:
-            new_snap = apply_batch(
-                spark,
-                table,
-                df,
-                epoch_id=epoch_id,
-                batch_id=batch_id,
-                staged_snapshot=snap,
-                fail_after_data_write=batch_id in self.fail_after_data_write_on,
-                broadcast_winner_limit=self.broadcast_winner_limit,
-            )
+        new_snap = apply_batch_mor(
+            spark,
+            table,
+            df,
+            epoch_id=epoch_id,
+            batch_id=batch_id,
+            staged_snapshot=snap,
+            fail_after_data_write=batch_id in self.fail_after_data_write_on,
+        )
+        heavy = sorted(
+            b
+            for b, n in table.delta_bytes_per_bucket(new_snap).items()
+            if n >= self.compact_delta_bytes
+        )
+        if table.delta_epoch_depth(new_snap) >= self.compact_every:
+            new_snap = table.compact(spark)  # full fold on depth trigger
+        elif heavy:
+            # bytes trigger: bucket-pruned compaction of just the
+            # overloaded buckets (hot-key version pile-up; cost is
+            # proportional to the touched slices, not the table)
+            new_snap = table.compact(spark, buckets=heavy)
+        if new_snap.get("batch_id") is None and self.keep_snapshots is not None:
+            table.expire_snapshots(keep_last=self.keep_snapshots)
         if batch_id in self.fail_before_checkpoint_on:
             raise RuntimeError("injected crash between commit and checkpoint write")
 

@@ -19,12 +19,12 @@ rule tests:
   ``batch_id``; committing an epoch ≤ the current one for an already-applied
   batch is a no-op (idempotent re-commit after crash/retry).
 - **Bucket layout**: data is hash-bucketed by key (``pmod(xxhash64(url),
-  n_buckets)``). A keyed MERGE only rewrites the buckets that contain
-  changed keys — copy-on-write at bucket granularity, which is what keeps a
-  10^10-row table mergeable: a batch touching 0.1% of keys rewrites ~all
-  buckets at small n_buckets but at production n_buckets (e.g. 4096) only
-  the affected slices. The bucket of a row is derivable from its key, so
-  merge joins co-partition by construction.
+  n_buckets)``). A batch appends delta files only to the buckets that
+  contain its keys, and compaction rewrites only the buckets that carry
+  deltas — which is what keeps a 10^10-row table mergeable: at production
+  n_buckets (e.g. 4096) a batch touching 0.1% of keys touches only the
+  affected slices. The bucket of a row is derivable from its key, so keyed
+  reads prune buckets by construction.
 - **Schema evolution by field id** (Iceberg-style): columns are tracked as
   ``{id, name, type}``; renames change only the name for an id, additive
   columns append a new id. Old data files keep their physical column names;
@@ -279,7 +279,8 @@ class LakeTable:
 
         ``allow_snapshot_diff=True`` opts into the O(2 full reads)
         fallback when the range is not delta-codeable (copy-on-write
-        epochs, expired committing snapshots): both endpoint states are
+        epochs of tables written by earlier versions, expired committing
+        snapshots): both endpoint states are
         resolved in full and diffed. Same output, table-scan cost — an
         explicit opt-in so a cheap incremental read can't silently turn
         into two table scans.
@@ -348,8 +349,9 @@ class LakeTable:
                 range_files += efiles
                 continue
             # committed with no delta files: an empty batch contributes no
-            # changes; a copy-on-write apply rewrote base files instead, so
-            # its changes are not delta-coded and the feed cannot see them.
+            # changes; a copy-on-write apply (which earlier versions wrote)
+            # rewrote base files instead, so its changes are not
+            # delta-coded and the feed cannot see them.
             # Strategy None (a snapshot written before the metric existed)
             # is only trustably empty when the snapshot ALSO recorded zero
             # batch files — otherwise it could be a pre-metric COW apply
@@ -368,10 +370,10 @@ class LakeTable:
                     range_files = None  # fall back to the full diff
                     break
                 raise ValueError(
-                    f"epoch {e} was applied {strategy} (copy-on-write): its "
-                    "changes are not delta-coded, so an incremental feed "
-                    "over it is unavailable — pass allow_snapshot_diff=True "
-                    "for the O(2 full reads) fallback"
+                    f"epoch {e} was applied {strategy} (copy-on-write, by an "
+                    "earlier writer): its changes are not delta-coded, so an "
+                    "incremental feed over it is unavailable — pass "
+                    "allow_snapshot_diff=True for the O(2 full reads) fallback"
                 )
         if range_files is not None and not range_files:
             return spark.createDataFrame([], change_schema)
@@ -495,9 +497,9 @@ class LakeTable:
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Retention: drop all but the newest ``keep_last`` snapshots and
-        DELETE data files no retained snapshot references (compaction and
-        COW merges leave replaced files on disk for time travel until
-        expired — the Iceberg expire_snapshots/remove_orphans shape).
+        DELETE data files no retained snapshot references (compaction
+        leaves replaced files on disk for time travel until expired — the
+        Iceberg expire_snapshots/remove_orphans shape).
         Returns {"snapshots_removed": n, "files_removed": n}."""
         named = self._history_with_names()
         history = [s for _, s in named]
@@ -1077,8 +1079,8 @@ class LakeTable:
         zorder_by: list[str] | None = None,
         zorder_bits: int = 16,
     ) -> dict:
-        """Fold deltas into fresh base files (merge-on-read →
-        copy-on-write amortization). Bucket-pruned: only buckets that
+        """Fold deltas into fresh base files (the merge-on-read
+        amortization step). Bucket-pruned: only buckets that
         actually carry deltas are resolved and rewritten — at production
         scale compaction cost is proportional to the touched slices, not
         the table. The resolved view is computed with the same read-time

@@ -46,6 +46,9 @@ from pyspark.sql.window import Window
 #: op codes accepted in the change log, matching cdc/pipeline.py.
 OPS = ("I", "U", "D")
 
+#: ``scd2_apply`` broadcasts a batch's key set only up to this many keys
+BROADCAST_KEYS_LIMIT = 2_000_000
+
 
 def _lww_dedup(changes: DataFrame, key_col: str, ts_col: str, tiebreak_col: str | None) -> DataFrame:
     """Collapse duplicate (key, ts) rows to the last writer.
@@ -202,7 +205,7 @@ def scd2_apply(
     op_col: str | None = None,
     tiebreak_col: str | None = None,
     collapse_unchanged: bool = False,
-    broadcast_keys_limit: int | None = None,
+    broadcast_keys_limit: int = BROADCAST_KEYS_LIMIT,
 ) -> DataFrame:
     """Apply one new change batch to an existing Type-2 history,
     touching ONLY the batch's keys.
@@ -220,16 +223,11 @@ def scd2_apply(
     timeline rather than corrupting the head.
 
     ``broadcast_keys_limit``: the batch key set is broadcast for the
-    anti/semi joins only below this count (the merge path's
-    ``BROADCAST_WINNER_LIMIT`` discipline) — a bulk-load batch above it
+    anti/semi joins only below this count — a bulk-load batch above it
     falls back to ordinary shuffle joins, trading one history exchange
     for not materializing a giant broadcast on every executor. The
     check costs one count on the (already tiny) distinct-key frame.
     """
-    from ..lake.merge import BROADCAST_WINNER_LIMIT
-
-    if broadcast_keys_limit is None:
-        broadcast_keys_limit = BROADCAST_WINNER_LIMIT
     keys = batch.select(key_col).distinct()
     if keys.count() <= broadcast_keys_limit:
         keys = F.broadcast(keys)

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -571,6 +571,17 @@ def nearest_centroid_expr(vec_col: str, centroids: list[list[float]]) -> F.Colum
     return F.expr(_ARGMIN_FOLD.format(arr=_centroid_d2s_expr(vec_col, centroids)))
 
 
+def _assignable(vec_col: str, dim: int) -> Column:
+    """True for a vector the trained path can assign to a centroid: not
+    null, of the data's ``dim``, with no null or NaN element. Any other
+    row has only null/NaN centroid distances (argmin -1)."""
+    return (
+        F.col(vec_col).isNotNull()
+        & (F.size(vec_col) == dim)
+        & ~F.expr(f"exists({vec_col}, x -> isnull(x) or isnan(cast(x as double)))")
+    )
+
+
 def ivf_train_centroids(
     df: DataFrame,
     vec_col: str,
@@ -591,11 +602,20 @@ def ivf_train_centroids(
       the only shuffle per round moves centroid-sized state, not data.
       The per-round driver collect is ≤ n_centroids rows.
 
+    Only vectors :func:`ivf_assign` can place train: a null, wrong-dim
+    or NaN-element vector would otherwise seed or skew a centroid (a NaN
+    centroid has no SQL literal, so no later plan could embed it).
+
     At 10^9 vectors, train on a sample (``sample_fraction``); assignment
     of the full set happens once in :func:`ivf_assign`.
     Returns (centroid_id, centroid array<double>).
     """
     vecs = df.select(F.col(vec_col).cast("array<double>").alias("v"))
+    try:
+        dim = _infer_dim(vecs, "v")
+    except ValueError:
+        dim = 0  # no non-empty vector to take the dim from
+    vecs = vecs.filter(_assignable("v", dim))
     if sample_fraction is not None:
         vecs = vecs.sample(fraction=sample_fraction, seed=42)
     init = (
@@ -689,11 +709,7 @@ def ivf_topk(
             return brute_force_topk(
                 df.filter(F.lit(False)), id_col, vec_col, query, k=k
             )
-        shard = df.filter(
-            F.col(vec_col).isNotNull()
-            & (F.size(vec_col) == dim)
-            & ~F.expr(f"exists({vec_col}, x -> isnull(x) or isnan(cast(x as double)))")
-        )
+        shard = df.filter(_assignable(vec_col, dim))
         return brute_force_topk(shard, id_col, vec_col, query, k=k)
     if centroids is None:
         centroids = ivf_train_centroids(df, vec_col, n_centroids=n_centroids)

@@ -1339,38 +1339,24 @@ def winnowing_fingerprints(
     text_col: str,
     k: int = 8,
     window: int = 4,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Per-document winnowing fingerprint set: (id, fp) rows, one per
     DISTINCT selected hash (positions dropped — cross-doc matching
     needs the value set only, which also makes the tie rule moot: equal
     minima select equal values).
 
-    ``engine``: "arrow" (default) computes hashing + window minima +
-    per-doc distinct inside one Arrow-batched pandas UDF (see the
-    round-6 kernel note below); "expr" keeps the pure JVM-expression
-    path — value-identical (engine-parity pinned by test) and the
-    reference semantics the DuckDB oracles replay.
-
-    Plan: normalization, k-gram slicing and hashing are ONE array
-    projection (JVM expressions, no UDF); the hashes then posexplode to
-    narrow (id, pos, h) rows and the per-window minimum is a per-doc
-    row_number-free sliding window (frame = [pos, pos+w-1]) followed by
-    a distinct fold — one doc-keyed exchange whose group size is the
-    doc's gram count, bounded by document length, never corpus-shaped.
-
-    The windows-minimum deliberately runs over ROWS, not nested array
-    lambdas: a transform(sequence(...), j -> array_min(slice(H, j, w)))
-    formulation re-evaluates the ENTIRE hash-array expression per
-    window element once the optimizer collapses projections —
-    O(len^2) md5 calls per document; measured as a wall-clock hang at
-    500 docs before this restructure.
+    Plan: normalization is a JVM projection; hashing, window minima and
+    the per-doc distinct run inside one Arrow-batched pandas UDF (kernel
+    note below) — no exchange.
 
     Docs shorter than k + window - 1 normalized chars emit no rows
     (nothing to guarantee).
     """
     if k < 2 or window < 1:
         raise ValueError(f"need k >= 2, window >= 1, got k={k} w={window}")
+    import pandas as pd  # noqa: F401 (Arrow batch carrier)
+    from pyspark.sql.functions import pandas_udf
+
     from .dedup import _spread
 
     c = F.col(text_col)
@@ -1381,99 +1367,58 @@ def winnowing_fingerprints(
     # hashing — the heaviest expression in the bench — in a SINGLE task;
     # task parallelism must track the exploded size
     out = _spread(df.select(F.col(id_col), norm.alias("__n")))
-    if engine == "arrow":
-        # Round-6 kernel (guide §4.2 — hand whole batches to vectorized
-        # native code): per document the md5-per-char-position hashing and
-        # the sliding-window minimum run inside ONE Arrow-batched pandas
-        # UDF — hashlib's C md5 replaces Catalyst's interpreted
-        # per-element transform lambda (string slice + concat_ws + md5 +
-        # conv per position), the window minimum is w-1 vectorized numpy
-        # elementwise minima instead of a doc-keyed exchange + sort +
-        # running-min window over EVERY char position, and the per-doc
-        # distinct is np.unique — so the whole operator needs no exchange
-        # at all before the (tiny) fingerprint rows explode.
-        # Exactness: hash = int of the first 6 bytes of md5(gram), the
-        # same 48-bit value as cast(conv(substring(md5(g),1,12),16,10) as
-        # bigint) — the normalized text is pure ASCII by construction so
-        # Python/JVM utf-8 agree byte-for-byte; selection = min per
-        # rolling window, values-only distinct — pinned equal to the
-        # JVM-expression path on real data by test_winnowing.py's
-        # engine-parity test and by every winnowing oracle entry.
-        import pandas as pd  # noqa: F401 (Arrow batch carrier)
-        from pyspark.sql.functions import pandas_udf
+    # Round-6 kernel (guide §4.2 — hand whole batches to vectorized
+    # native code): per document the md5-per-char-position hashing and
+    # the sliding-window minimum run inside ONE Arrow-batched pandas
+    # UDF — hashlib's C md5 replaces Catalyst's interpreted
+    # per-element transform lambda (string slice + concat_ws + md5 +
+    # conv per position), the window minimum is w-1 vectorized numpy
+    # elementwise minima instead of a doc-keyed exchange + sort +
+    # running-min window over EVERY char position, and the per-doc
+    # distinct is np.unique — so the whole operator needs no exchange
+    # at all before the (tiny) fingerprint rows explode.
+    # Exactness: hash = int of the first 6 bytes of md5(gram), the
+    # same 48-bit value as cast(conv(substring(md5(g),1,12),16,10) as
+    # bigint) — the normalized text is pure ASCII by construction so
+    # Python/JVM utf-8 agree byte-for-byte; selection = min per
+    # rolling window, values-only distinct — pinned against a
+    # pure-Python replay by test_winnowing.py and against the DuckDB
+    # replay by every winnowing oracle entry.
+    kk, ww = int(k), int(window)
 
-        kk, ww = int(k), int(window)
+    @pandas_udf("array<bigint>")
+    def _fps(s):
+        import hashlib
 
-        @pandas_udf("array<bigint>")
-        def _fps(s):
-            import hashlib
+        import pandas as pd
 
-            import pandas as pd
+        import numpy as np
 
-            import numpy as np
+        md5 = hashlib.md5
+        res = []
+        for t in s:
+            if t is None or len(t) < kk + ww - 1:
+                res.append([])
+                continue
+            b = t.encode("utf-8")
+            n = len(b) - kk + 1
+            hs = np.fromiter(
+                (
+                    int.from_bytes(md5(b[i : i + kk]).digest()[:6], "big")
+                    for i in range(n)
+                ),
+                dtype=np.int64,
+                count=n,
+            )
+            m = hs[: n - ww + 1].copy()
+            for j in range(1, ww):
+                np.minimum(m, hs[j : j + n - ww + 1], out=m)
+            res.append(np.unique(m))
+        return pd.Series(res)
 
-            md5 = hashlib.md5
-            res = []
-            for t in s:
-                if t is None or len(t) < kk + ww - 1:
-                    res.append([])
-                    continue
-                b = t.encode("utf-8")
-                n = len(b) - kk + 1
-                hs = np.fromiter(
-                    (
-                        int.from_bytes(md5(b[i : i + kk]).digest()[:6], "big")
-                        for i in range(n)
-                    ),
-                    dtype=np.int64,
-                    count=n,
-                )
-                m = hs[: n - ww + 1].copy()
-                for j in range(1, ww):
-                    np.minimum(m, hs[j : j + n - ww + 1], out=m)
-                res.append(np.unique(m))
-            return pd.Series(res)
-
-        return out.select(
-            F.col(id_col), F.explode(_fps("__n")).alias("fp")
-        )
-    from pyspark.sql.window import Window as W
-
-    # sequence(1, 0) DESCENDS in Spark (the ROUND5 bigram trap), so the
-    # transform is CASE-guarded on having at least one gram. The string
-    # is split to a char ARRAY bound once per row (the shingles() lambda
-    # binding): substring(__n, i, k) seeks code points from the string
-    # start — O(i) per call, O(len²) per document, measured 18× wall at
-    # 16× doc length — while slice() on the bound array is O(k).
-    grams = F.expr(
-        f"case when length(__n) >= {k} then "
-        f"transform(array(split(__n, '')), a -> "
-        f"transform(sequence(1, size(a) - {k - 1}), "
-        f"i -> concat_ws('', slice(a, i, {k}))))[0] else array() end"
+    return out.select(
+        F.col(id_col), F.explode(_fps("__n")).alias("fp")
     )
-    hashes = F.expr(
-        "transform(__grams, g -> "
-        "cast(conv(substring(md5(g), 1, 12), 16, 10) as bigint))"
-    )
-    rows = (
-        out.withColumn("__grams", grams)
-        .withColumn("__h", hashes)
-        .select(
-            F.col(id_col),
-            F.size("__h").alias("__ng"),
-            F.posexplode("__h").alias("__pos", "__hash"),
-        )
-    )
-    wspec = (
-        W.partitionBy(id_col).orderBy("__pos").rowsBetween(0, window - 1)
-    )
-    sel = (
-        rows.withColumn("__wmin", F.min("__hash").over(wspec))
-        # only full windows select a fingerprint (pos is 0-based)
-        .filter(F.col("__pos") <= F.col("__ng") - window)
-        .select(F.col(id_col), F.col("__wmin").alias("fp"))
-    )
-    return sel.distinct()
 
 
 def winnowing_near_dups(

@@ -140,7 +140,7 @@ def write_warc(
 def warc_to_change_batch(warc: DataFrame, op: str = "U") -> DataFrame:
     """WARC response records → the engine's op-coded change batch
     (op, url, warc_ts, html, lang): the adapter that lets
-    ``lake.merge.apply_batch`` / the CDC pipeline ingest a crawl dump
+    ``lake.merge.apply_batch_mor`` / the CDC pipeline ingest a crawl dump
     directly. Payload bytes become the ``html`` binary column; ``lang``
     is NULL (detection is a downstream operator). Non-response records
     and url-less records drop."""

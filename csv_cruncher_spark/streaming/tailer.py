@@ -29,23 +29,17 @@ from ..cdc.pipeline import CdcPipeline
 
 
 class ChangeLogTailer:
-    """Poll ``batch_dir`` and apply new change batches incrementally."""
+    """Poll ``batch_dir`` and apply new change batches incrementally
+    through ``pipeline``, configured as for an offline replay."""
 
     def __init__(
         self,
-        table_path: str,
+        pipeline: CdcPipeline,
         batch_dir: str,
-        n_buckets: int = 16,
         include: str | None = None,
         exclude: str | None = None,
-        on_malformed: str = "drop",
-        expectations=None,
-        partial_updates: str | None = None,
     ):
-        self.pipeline = CdcPipeline(
-            table_path, n_buckets=n_buckets, on_malformed=on_malformed,
-            expectations=expectations, partial_updates=partial_updates,
-        )
+        self.pipeline = pipeline
         self.batch_dir = batch_dir
         self.include = include
         self.exclude = exclude

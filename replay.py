@@ -33,7 +33,6 @@ def main() -> int:
     ap.add_argument("--batches", required=True, help="change-batch directory")
     ap.add_argument("--master", default=None)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--mode", choices=["mor", "cow"], default="mor")
     ap.add_argument("--compact-every", type=int, default=16)
     ap.add_argument("--compact-delta-bytes", type=int, default=4 << 30,
                     help="per-bucket delta byte cap triggering bucket-pruned compaction")
@@ -153,38 +152,28 @@ def main() -> int:
             expectations.append(
                 Expectation(name, cond, action=action, applies_to=applies)
             )
+    from csv_cruncher_spark.cdc.pipeline import CdcPipeline
+
+    pipe = CdcPipeline(
+        args.table,
+        n_buckets=args.buckets,
+        compact_every=args.compact_every,
+        compact_delta_bytes=args.compact_delta_bytes,
+        on_malformed=args.on_malformed,
+        expectations=expectations,
+        partial_updates=args.partial_updates,
+    )
     if args.tail:
         from csv_cruncher_spark.streaming import ChangeLogTailer
 
         tailer = ChangeLogTailer(
-            args.table,
-            args.batches,
-            n_buckets=args.buckets,
-            include=args.include,
-            exclude=args.exclude,
-            on_malformed=args.on_malformed,
-            expectations=expectations,
-            partial_updates=args.partial_updates,
+            pipe, args.batches, include=args.include, exclude=args.exclude
         )
-        tailer.pipeline.mode = args.mode
-        tailer.pipeline.compact_every = args.compact_every
         applied = tailer.run_until_idle(
             spark, poll_interval_s=args.poll_interval, idle_polls=3
         )
-        ckpt = tailer.pipeline.load_checkpoint()
+        ckpt = pipe.load_checkpoint()
     else:
-        from csv_cruncher_spark.cdc.pipeline import CdcPipeline
-
-        pipe = CdcPipeline(
-            args.table,
-            n_buckets=args.buckets,
-            mode=args.mode,
-            compact_every=args.compact_every,
-            compact_delta_bytes=args.compact_delta_bytes,
-            on_malformed=args.on_malformed,
-            expectations=expectations,
-            partial_updates=args.partial_updates,
-        )
         before = set(pipe.load_checkpoint()["batches_applied"])
         ckpt = pipe.run(
             spark,

@@ -221,8 +221,10 @@ def test_tailer_enforces_expectations(spark, tmp_path):
     _write_batch(bdir, 0, [_row(url="https://x.example/a"),
                            _row(url="http://x.example/b")])
     rules = [Expectation("https_only", "url LIKE 'https://%'", action="drop")]
-    tailer = ChangeLogTailer(str(tmp_path / "lake"), bdir, n_buckets=2,
-                             expectations=rules)
+    tailer = ChangeLogTailer(
+        CdcPipeline(str(tmp_path / "lake"), n_buckets=2, expectations=rules),
+        bdir,
+    )
     assert tailer.poll_once(spark) == ["batch-00000.csv"]
     urls = {r.url for r in LakeTable.load(str(tmp_path / "lake"))
             .read(spark).select("url").collect()}
@@ -307,7 +309,7 @@ def test_rules_resolve_across_sidecar_renames(spark, tmp_path):
 # ---------- Spark job budget of one warehouse-mode batch ----------
 
 #: jobs one warehouse-mode batch may run (see the test's docstring)
-BATCH_JOB_BUDGET = 15
+BATCH_JOB_BUDGET = 14
 
 
 def _jobs_of(spark, fn) -> int:
@@ -330,8 +332,8 @@ def test_warehouse_batch_job_budget(spark, tmp_path):
     dlq rule, a warn rule and a Debezium placeholder that resolves from
     table state.
 
-    What the budget holds, per phase: the CSV header read; the placeholder
-    key collect (bucket ids ride along, and the point lookup scans with
+    What the budget holds, per phase (the CSV header is read without a
+    job): the placeholder key collect (bucket ids ride along, and the point lookup scans with
     the manifest schema, so neither needs a job of its own); ONE counting
     aggregate over the evaluated batch (rule violations, dropped,
     quarantined and parser rejects together, plus the jobs that

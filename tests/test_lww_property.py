@@ -1,8 +1,8 @@
 """Property-based LWW merge semantics (hypothesis): for RANDOM op
 sequences — duplicate in-batch events, null/equal/regressing timestamps,
-delete-then-reinsert, multi-batch interleavings — the three physical
-merge strategies (MOR, COW-broadcast, COW-shuffle) and a trivial
-sequential Python fold must all produce the same final table state."""
+delete-then-reinsert, multi-batch interleavings — the merge-on-read
+replay must produce the same final table state as a trivial sequential
+Python fold."""
 
 from __future__ import annotations
 
@@ -90,26 +90,19 @@ def _final(spark, table_path: str) -> dict:
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(batches=batches_st)
-def test_three_strategies_agree_with_python_fold(spark, batches):
+def test_mor_replay_agrees_with_python_fold(spark, batches):
     work = tempfile.mkdtemp(prefix="lww_prop_")
     try:
         bdir = os.path.join(work, "batches")
         os.makedirs(bdir)
         _write_batches(bdir, batches)
-        got = {}
-        for name, kwargs in {
-            "mor": dict(mode="mor"),
-            "bcast": dict(mode="cow", broadcast_winner_limit=10**9),
-            "shuf": dict(mode="cow", broadcast_winner_limit=0),
-        }.items():
-            p = os.path.join(work, f"lake_{name}")
-            CdcPipeline(p, n_buckets=2, **kwargs).run(spark, bdir)
-            got[name] = _final(spark, p)
-        assert got["mor"] == got["bcast"] == got["shuf"], batches
+        p = os.path.join(work, "lake")
+        CdcPipeline(p, n_buckets=2).run(spark, bdir)
+        got = _final(spark, p)
         want = _python_fold(batches)
-        assert set(got["mor"]) == set(want), batches
+        assert set(got) == set(want), batches
         for url, (ts, lang, html) in want.items():
-            gts, glang, ghtml = got["mor"][url]
+            gts, glang, ghtml = got[url]
             assert gts == ts, (url, batches)
             assert glang == lang, (url, batches)
             assert ghtml == html, (url, batches)

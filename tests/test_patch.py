@@ -204,8 +204,10 @@ def test_tailer_passes_partial_updates(spark, tmp_path):
         "warc_ts": "2024-01-01 00:00:20",
         "html": _b64(PH), "lang": "de",
     }])
-    tailer = ChangeLogTailer(str(tmp_path / "lake"), bdir, n_buckets=2,
-                             partial_updates=PH)
+    tailer = ChangeLogTailer(
+        CdcPipeline(str(tmp_path / "lake"), n_buckets=2, partial_updates=PH),
+        bdir,
+    )
     tailer.poll_once(spark)
     r = LakeTable.load(str(tmp_path / "lake")).read(spark).collect()[0]
     assert bytes(r.html) == b"<html><body>v1</body></html>"

@@ -430,3 +430,23 @@ def test_replay_expectations_flag(spark, change_log, monkeypatch, capsys):
         for r in LakeTable.load(str(tp / "lake")).read(spark).select("lang").collect()
     }
     assert langs <= {"en", "de", "cs", "fr", "es"}
+
+
+def test_replay_tail_honours_compaction_triggers(spark, change_log, monkeypatch, capsys):
+    """--tail builds the same pipeline as an offline replay: a one-byte
+    --compact-delta-bytes compacts every bucket a batch touched, so no
+    delta file outlives its batch even with the epoch trigger out of
+    reach."""
+    from csv_cruncher_spark.lake.table import LakeTable
+
+    tp, paths = change_log
+    table = str(tp / "lake_tail")
+    res = _run_replay(
+        monkeypatch, capsys,
+        ["--table", table, "--batches", os.path.dirname(paths[0]),
+         "--buckets", "4", "--tail", "--poll-interval", "0",
+         "--compact-every", "1000000", "--compact-delta-bytes", "1"],
+    )
+    assert res["applied_batches"] == len(paths)
+    files = LakeTable.load(table).snapshot()["files"]
+    assert files and not any(f.get("kind") == "delta" for f in files)

@@ -398,11 +398,9 @@ def test_knn_exact_fastpath_matches_trained(spark):
         k=5, n_centroids=8, n_probe=8,
     ).collect()
     # force the legacy trained path by passing pre-trained centroids,
-    # trained without the NaN row: a NaN vector in training makes a NaN
-    # centroid, which is not what this test is about
-    cents = similarity.ivf_train_centroids(
-        r_named.filter(F.col("id_r") != 10_000_004), "embedding", n_centroids=8
-    )
+    # trained on every right row: the degenerate ones must not seed or
+    # skew a centroid (a NaN one could not be planned)
+    cents = similarity.ivf_train_centroids(r_named, "embedding", n_centroids=8)
     trained = similarity.knn_join(
         left, r_named, "id_l", "id_r", "embedding", "embedding",
         k=5, n_centroids=8, n_probe=8, centroids=cents,

@@ -115,11 +115,11 @@ def test_diff_plan_is_payload_free(spark):
 
 def test_roundtrip_through_real_merge(spark, tmp_path):
     """Bootstrapping a lake table at the old snapshot and applying the
-    generated batch through the REAL apply_batch yields exactly the new
+    generated batch through the REAL apply_batch_mor yields exactly the new
     snapshot — the invariant that makes the differ a valid CDC source."""
     from csv_cruncher_spark.cdc.extract import extract_text_udf
     from csv_cruncher_spark.cdc.pipeline import PAGES_FIELDS
-    from csv_cruncher_spark.lake.merge import apply_batch
+    from csv_cruncher_spark.lake.merge import apply_batch_mor
     from csv_cruncher_spark.lake.table import LakeTable
 
     old, new, _ = _snapshots(spark)
@@ -131,12 +131,12 @@ def test_roundtrip_through_real_merge(spark, tmp_path):
         )
 
     boot = as_batch(old.select(F.lit("I").alias("op"), "url", "warc_ts", "html", "lang"))
-    apply_batch(spark, t, boot, epoch_id=0, batch_id="boot")
+    apply_batch_mor(spark, t, boot, epoch_id=0, batch_id="boot")
 
     delta = as_batch(
         snapshot_to_changes(old, new, delete_ts="2026-02-01 00:00:00")
     )
-    apply_batch(spark, t, delta, epoch_id=1, batch_id="delta")
+    apply_batch_mor(spark, t, delta, epoch_id=1, batch_id="delta")
 
     got = sorted(
         tuple(r)

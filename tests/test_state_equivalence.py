@@ -106,24 +106,6 @@ def test_row_idx_order_correct_under_split_parallel_read(spark, change_log):
     assert got == want
 
 
-def test_broadcast_and_shuffle_merge_agree(spark, change_log):
-    """The two physical merge strategies (broadcast vs full-outer shuffle,
-    lake/merge.py) must produce identical table state — strategy is a
-    physical choice only."""
-    d, paths = change_log
-    bdir = os.path.dirname(paths[0])
-    pb = str(d / "lake_bcast")
-    ps = str(d / "lake_shuf")
-    CdcPipeline(pb, n_buckets=4, mode="cow", broadcast_winner_limit=10**9).run(spark, bdir)
-    CdcPipeline(ps, n_buckets=4, mode="cow", broadcast_winner_limit=0).run(spark, bdir)
-    assert _table_state(spark, pb) == _table_state(spark, ps)
-    # metrics record which strategy ran
-    from csv_cruncher_spark.lake.table import LakeTable
-
-    assert LakeTable.load(pb).snapshot()["metrics"]["last_batch_strategy"] == "broadcast"
-    assert LakeTable.load(ps).snapshot()["metrics"]["last_batch_strategy"] == "shuffle"
-
-
 def test_read_change_batch_rejects_oversized_splits(spark, change_log):
     """The row_idx gap math assumes <= 1M lines per split; the reader must
     refuse a session configured past the 128 MiB bound rather than
@@ -142,10 +124,10 @@ def test_read_change_batch_rejects_oversized_splits(spark, change_log):
 
 def test_null_warc_ts_winner_agrees_across_strategies(spark, tmp_path):
     """An event whose warc_ts fails to parse (to_timestamp → NULL) must be
-    treated as stale against any non-null existing row by ALL THREE merge
-    paths (broadcast, shuffle, MOR) — the round-1 advice found the
-    broadcast path silently applying it (NULL comparison dropped the row
-    from the stale set) while the other two kept the old row."""
+    treated as stale against any non-null existing row by the MOR read
+    fold, and still apply to a url with no row yet — the round-1 advice
+    found a merge silently applying it (a NULL comparison dropped the row
+    from the stale set)."""
     import base64
     import csv as _csv
 
@@ -171,33 +153,26 @@ def test_null_warc_ts_winner_agrees_across_strategies(spark, tmp_path):
             w.writerow(BATCH_COLUMNS_V1)
             w.writerows(rows)
 
-    states = {}
-    for name, kwargs in {
-        "mor": dict(mode="mor"),
-        "bcast": dict(mode="cow", broadcast_winner_limit=10**9),
-        "shuf": dict(mode="cow", broadcast_winner_limit=0),
-    }.items():
-        p = str(tmp_path / f"lake_{name}")
-        CdcPipeline(p, n_buckets=2, **kwargs).run(spark, str(bdir))
-        states[name] = _table_state(spark, p)
-
-    assert states["mor"] == states["bcast"] == states["shuf"]
+    p = str(tmp_path / "lake")
+    CdcPipeline(p, n_buckets=2).run(spark, str(bdir))
+    state = _table_state(spark, p)
     # the non-null old row survived the null-ts update
-    assert states["mor"][u1]["lang"] == "en"
-    assert states["mor"][u1]["html"] == h0
+    assert state[u1]["lang"] == "en"
+    assert state[u1]["html"] == h0
     # the null-ts insert on a fresh url applied
-    assert states["mor"][u2]["lang"] == "fr"
-    assert states["mor"][u2]["warc_ts"] is None
+    assert state[u2]["lang"] == "fr"
+    assert state[u2]["warc_ts"] is None
 
 
 def test_mor_replay_matches_reference_and_cow(spark, change_log):
-    """Merge-on-read (delta + read-time resolution, the default mode)
-    must equal both the eager COW replay and the sequential reference
-    fold; compaction must not change the view."""
+    """Merge-on-read (delta + read-time resolution) with every delta still
+    uncompacted must equal the sequential reference fold, and so must
+    the base files compaction writes from it: compaction must not
+    change the view."""
     d, paths = change_log
     bdir = os.path.dirname(paths[0])
     pm = str(d / "lake_mor")
-    CdcPipeline(pm, n_buckets=4, mode="mor", compact_every=10**6).run(spark, bdir)
+    CdcPipeline(pm, n_buckets=4, compact_every=10**6).run(spark, bdir)
     t = LakeTable.load(pm)
     assert any(f.get("kind") == "delta" for f in t.snapshot()["files"]), (
         "expected uncompacted deltas for this test"
@@ -218,7 +193,7 @@ def test_mor_auto_compaction_triggers(spark, change_log):
     d, paths = change_log
     bdir = os.path.dirname(paths[0])
     p = str(d / "lake_mor_auto")
-    CdcPipeline(p, n_buckets=4, mode="mor", compact_every=2).run(spark, bdir)
+    CdcPipeline(p, n_buckets=4, compact_every=2).run(spark, bdir)
     t = LakeTable.load(p)
     # 5 batches, compact at depth ≥2 → at most 1 uncompacted epoch remains
     assert t.delta_epoch_depth() <= 1
@@ -237,7 +212,7 @@ def test_mor_delete_then_older_reinsert(spark, tmp_path):
     """The trap that breaks naive max-by-timestamp MOR resolution: after a
     delete, a re-insert with an OLDER warc_ts must still land (the eager
     rule applies events against *current state*, and a delete clears the
-    version floor). reference_fold and both merge modes agree."""
+    version floor). reference_fold and the MOR replay agree."""
     import base64 as b64
 
     bdir = tmp_path / "batches"
@@ -257,12 +232,11 @@ def test_mor_delete_then_older_reinsert(spark, tmp_path):
     )
     want = reference_fold(sorted(str(p) for p in bdir.glob("*.csv")))
     assert "https://e.com/a" in want  # the older re-insert survives
-    for mode in ("mor", "cow"):
-        p = str(tmp_path / f"lake_{mode}")
-        CdcPipeline(p, n_buckets=2, mode=mode).run(spark, str(bdir))
-        got = _table_state(spark, p)
-        assert list(got) == ["https://e.com/a"], mode
-        assert got["https://e.com/a"]["warc_ts"] == "2024-01-01 00:00:11", mode
+    p = str(tmp_path / "lake")
+    CdcPipeline(p, n_buckets=2).run(spark, str(bdir))
+    got = _table_state(spark, p)
+    assert list(got) == ["https://e.com/a"]
+    assert got["https://e.com/a"]["warc_ts"] == "2024-01-01 00:00:11"
 
 
 def test_json_change_batches_equivalent(spark, tmp_path):
@@ -309,7 +283,7 @@ def test_compaction_is_bucket_pruned(spark, tmp_path):
     rows = [f"I,https://e.com/p{i},2024-01-01 00:00:0{i % 10},{h},en" for i in range(40)]
     (bdir / "batch-00000.csv").write_text("op,url,warc_ts,html,lang\n" + "\n".join(rows) + "\n")
     p = str(tmp_path / "lake")
-    pipe = CdcPipeline(p, n_buckets=8, mode="mor", compact_every=10**6)
+    pipe = CdcPipeline(p, n_buckets=8, compact_every=10**6)
     pipe.run(spark, str(bdir), max_batches=1)
     t = LakeTable.load(p)
     t.compact(spark)  # all-base snapshot

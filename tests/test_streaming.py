@@ -8,6 +8,7 @@ import os
 import pytest
 
 from csv_cruncher_spark.cdc.fixtures import ChangeLogSpec, generate_change_log, reference_fold
+from csv_cruncher_spark.cdc.pipeline import CdcPipeline
 from csv_cruncher_spark.lake.table import LakeTable
 from csv_cruncher_spark.streaming import ChangeLogTailer
 from csv_cruncher_spark.streaming.rollup import run_rollup_to_memory
@@ -36,7 +37,7 @@ def test_tailer_applies_incrementally(spark, tmp_path):
         os.rename(p, p + ".hidden")
         hidden.append(p)
 
-    tailer = ChangeLogTailer(str(tmp_path / "lake"), bdir, n_buckets=4)
+    tailer = ChangeLogTailer(CdcPipeline(str(tmp_path / "lake"), n_buckets=4), bdir)
     first = tailer.poll_once(spark)
     assert len(first) == 2
 
@@ -60,11 +61,12 @@ def test_tailer_applies_incrementally(spark, tmp_path):
 def test_tailer_run_until_idle(spark, tmp_path):
     bdir = str(tmp_path / "batches")
     _gen(bdir, 3, seed=12)
-    tailer = ChangeLogTailer(str(tmp_path / "lake"), bdir, n_buckets=4)
+    tailer = ChangeLogTailer(CdcPipeline(str(tmp_path / "lake"), n_buckets=4), bdir)
     n = tailer.run_until_idle(spark, poll_interval_s=0.01, idle_polls=2, max_polls=10)
     assert n == 3
     # a second tail session resumes from checkpoint and applies nothing
-    n2 = ChangeLogTailer(str(tmp_path / "lake"), bdir, n_buckets=4).run_until_idle(
+    pipe = CdcPipeline(str(tmp_path / "lake"), n_buckets=4)
+    n2 = ChangeLogTailer(pipe, bdir).run_until_idle(
         spark, poll_interval_s=0.01, idle_polls=1, max_polls=3
     )
     assert n2 == 0

@@ -1,6 +1,6 @@
 """Snapshot time travel and retention (LakeTable.snapshot_at /
-expire_snapshots) — the table-maintenance surface compaction and COW
-merges rely on for space reclamation."""
+expire_snapshots) — the table-maintenance surface compaction relies on
+for space reclamation."""
 
 from __future__ import annotations
 
@@ -310,16 +310,33 @@ def test_bucket_files_are_key_sorted(spark, tmp_path):
         assert urls == sorted(urls), f["path"]
 
 
+def _restage_commit(t, epoch, edit_metrics):
+    """Re-stage ``epoch``'s committing snapshot as an older writer left it:
+    without the epoch's delta files, its metrics passed through
+    ``edit_metrics``."""
+    name, snap = next(
+        (n, s) for n, s in t._history_with_names()
+        if s["epoch_id"] == epoch and s["batch_id"]
+    )
+    doctored = dict(snap, metrics=edit_metrics(snap["metrics"]))
+    doctored["files"] = [f for f in snap["files"] if f.get("epoch") != epoch]
+    t.catalog.stage_snapshot(name, doctored)
+
+
 def test_changes_between_rejects_cow_epochs(spark, tmp_path):
-    """Copy-on-write applies rewrite base files — their changes are not
-    delta-coded, so the feed must refuse with a specific error instead of
-    silently emitting an empty/wrong feed."""
+    """A copy-on-write apply, as tables written by earlier versions hold,
+    rewrote base files — its changes are not delta-coded, so the feed must
+    refuse with a specific error instead of silently emitting an
+    empty/wrong feed. The history is built as such a writer left it: every
+    epoch's state in base files (compaction after each batch), and epoch
+    1's committing snapshot with no delta files and a COW strategy."""
     import pytest as _pytest
 
     paths = _mk_log(tmp_path, n_batches=2, seed=39)
     p = str(tmp_path / "lake_cow")
-    CdcPipeline(p, n_buckets=4, mode="cow").run(spark, os.path.dirname(paths[0]))
+    CdcPipeline(p, n_buckets=4, compact_every=1).run(spark, os.path.dirname(paths[0]))
     t = LakeTable.load(p)
+    _restage_commit(t, 1, lambda m: {**m, "last_batch_strategy": "broadcast"})
     with _pytest.raises(ValueError, match="not delta-coded"):
         t.changes_between(spark, from_epoch=0)
     # bootstrap (-1) still works: it needs no deltas
@@ -358,14 +375,9 @@ def test_changes_between_refuses_pre_metric_snapshots(spark, tmp_path):
     t = LakeTable.load(p)
     # strip the batch metrics from epoch 1's committing snapshot, like a
     # round-1-era writer would have left it, and drop its delta files
-    hist = t._history_with_names()
-    name, snap = next((n, s) for n, s in hist if s["epoch_id"] == 1 and s["batch_id"])
-    doctored = dict(snap)
-    doctored["metrics"] = {
-        k: v for k, v in snap["metrics"].items() if not k.startswith("last_batch")
-    }
-    doctored["files"] = [f for f in snap["files"] if f.get("epoch") != 1]
-    t.catalog.stage_snapshot(name, doctored)
+    _restage_commit(
+        t, 1, lambda m: {k: v for k, v in m.items() if not k.startswith("last_batch")}
+    )
     with _pytest.raises(ValueError, match="not delta-coded"):
         t.changes_between(spark, from_epoch=0, to_epoch=1)
     # the explicit opt-in fallback still resolves the range

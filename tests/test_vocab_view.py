@@ -152,7 +152,7 @@ def test_tailer_loop_keeps_vocabulary_current(spark, tmp_path):
     bdir = tmp_path / "incoming"
     bdir.mkdir()
     lake = str(tmp_path / "lake")
-    tailer = ChangeLogTailer(lake, str(bdir), n_buckets=4)
+    tailer = ChangeLogTailer(CdcPipeline(lake, n_buckets=4), str(bdir))
     mv = vocab_view.MaintainedVocabulary(lake, str(tmp_path / "vocab"))
     for p in paths:
         shutil.copy(p, bdir / os.path.basename(p))

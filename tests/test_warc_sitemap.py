@@ -102,7 +102,7 @@ def test_warc_header_case_insensitive_and_missing_uri(spark, tmp_path):
 
 def test_warc_change_batch_through_real_merge(spark, tmp_path):
     from csv_cruncher_spark.cdc.pipeline import PAGES_FIELDS
-    from csv_cruncher_spark.lake.merge import apply_batch
+    from csv_cruncher_spark.lake.merge import apply_batch_mor
     from csv_cruncher_spark.lake.table import LakeTable
 
     pages = _pages(spark, 4)
@@ -112,7 +112,7 @@ def test_warc_change_batch_through_real_merge(spark, tmp_path):
         "row_idx", F.monotonically_increasing_id()
     )
     t = LakeTable.create(str(tmp_path / "lake"), PAGES_FIELDS, n_buckets=2)
-    apply_batch(spark, t, batch, epoch_id=0, batch_id="warc-0")
+    apply_batch_mor(spark, t, batch, epoch_id=0, batch_id="warc-0")
     got = {
         r["url"]: r["html"] for r in t.read(spark).select("url", "html").collect()
     }

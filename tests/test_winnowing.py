@@ -2,7 +2,7 @@
 replay of the whole construction, the coverage guarantee (shared
 substring >= k + w - 1 chars ⇒ shared fingerprint), short-doc and
 empty-doc edges, pair mining with posting-list caps, and the
-doc-keyed single-exchange plan of the fingerprint build."""
+exchange-free Arrow plan of the fingerprint build."""
 
 import hashlib
 import re
@@ -105,40 +105,10 @@ def test_near_dup_pairs_and_cap(spark):
     assert none == 0
 
 
-def test_fingerprint_plan_is_doc_keyed_and_python_free(spark, docs):
-    """engine="expr": the gram/hash build is a pure projection; the ONLY
-    exchanges are the doc-keyed window and the distinct fold (group size
-    bounded by document length). The nested-array-lambda formulation this
-    replaced re-evaluated the hash array per window element (O(len²)
-    md5s — measured as a hang); row-windows keep it linear."""
-    plan = (
-        winnowing_fingerprints(docs, "doc_id", "text", engine="expr")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BatchEvalPython" not in plan
-    # ONE exchange: the distinct's (doc_id, fp) grouping is satisfied by
-    # the window's doc_id partitioning, so Catalyst plans no second one
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Generate posexplode" in plan or "posexplode" in plan
-
-
-def test_fingerprint_arrow_engine_matches_expr_and_is_exchange_free(spark, docs):
-    """engine="arrow" (default, round-6): hashing + window minima +
-    per-doc distinct run inside one Arrow-batched UDF — value-identical
-    to the JVM-expression path on real data, Arrow-batched (never
-    row-at-a-time Python), and with NO exchange at all (per-doc work
-    needs no shuffle)."""
-    a = sorted(
-        map(tuple, winnowing_fingerprints(docs, "doc_id", "text",
-                                          engine="expr").collect())
-    )
-    b = sorted(
-        map(tuple, winnowing_fingerprints(docs, "doc_id", "text",
-                                          engine="arrow").collect())
-    )
-    assert a == b and len(a) > 0
+def test_fingerprint_plan_is_arrow_batched_and_exchange_free(spark, docs):
+    """Hashing + window minima + per-doc distinct run inside one
+    Arrow-batched UDF (never row-at-a-time Python) with NO exchange at
+    all: per-doc work needs no shuffle."""
     plan = (
         winnowing_fingerprints(docs, "doc_id", "text")
         ._jdf.queryExecution()
