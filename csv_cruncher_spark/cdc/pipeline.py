@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.table import LakeTable, _atomic_write_json
+from ..session import conf_bytes
 from ..sources.discovery import filter_paths
 
 PAGES_FIELDS: list[tuple[str, str]] = [
@@ -135,16 +136,7 @@ def read_change_batch(
     return df
 
 
-_SIZE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 ROW_IDX_SPLIT_BOUND = 128 << 20  # 128 MiB: the bound the 2^20 gap math assumes
-
-
-def _parse_bytes(v: str) -> int:
-    """Parse Spark byte-size conf strings ('134217728b', '8m', '128')."""
-    s = str(v).strip().lower().removesuffix("ib")
-    if s and s[-1] in _SIZE_SUFFIX:
-        return int(float(s[:-1]) * _SIZE_SUFFIX[s[-1]])
-    return int(s)
 
 
 def _check_split_bound(spark: SparkSession) -> None:
@@ -154,7 +146,7 @@ def _check_split_bound(spark: SparkSession) -> None:
     block_start*2^20 + local-counter key would stop being monotone in
     file order, silently mis-breaking LWW warc_ts ties."""
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    if _parse_bytes(raw) > ROW_IDX_SPLIT_BOUND:
+    if conf_bytes(raw) > ROW_IDX_SPLIT_BOUND:
         raise ValueError(
             f"spark.sql.files.maxPartitionBytes={raw} exceeds the "
             f"{ROW_IDX_SPLIT_BOUND}-byte bound read_change_batch's row_idx "

@@ -145,21 +145,22 @@ def embedding_contamination_report(
     # deferred import: similarity pulls numpy/pandas at module top (its
     # LSH/matmul kernels need them); the n-gram screens above must stay
     # importable in a pyspark-only environment
-    from .similarity import dot_expr, norm_expr
+    from .similarity import _dot_unrolled
 
     bid = bench_id_col or id_col
+    # the sequential folds (dim 0: no dim is inferred, which would cost a job)
     c = corpus.select(
         F.col(id_col).alias("__cid"),
         F.col(vec_col).alias("__cv"),
-        norm_expr(vec_col).alias("__cn"),
+        F.sqrt(F.expr(_dot_unrolled(vec_col, vec_col, 0))).alias("__cn"),
     )
     b = bench.select(
         F.col(bid).alias("__bid"),
         F.col(vec_col).alias("__bv"),
-        norm_expr(vec_col).alias("__bn"),
+        F.sqrt(F.expr(_dot_unrolled(vec_col, vec_col, 0))).alias("__bn"),
     )
     denom = F.col("__cn") * F.col("__bn")
-    cos = F.when(denom > 0, dot_expr("__cv", "__bv") / denom)
+    cos = F.when(denom > 0, F.expr(_dot_unrolled("__cv", "__bv", 0)) / denom)
     pairs = (
         c.join(F.broadcast(b))
         .select(F.col("__cid"), F.col("__bid"), cos.alias("__cos"))

@@ -31,6 +31,8 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import conf_bytes
+
 # fixed affine-permutation constants for minhash (deterministic, seedless).
 # 31-bit Mersenne prime: a*h + b stays < 2^62, no ANSI long overflow.
 _MERSENNE = (1 << 31) - 1
@@ -64,22 +66,6 @@ def shingles(text_col: str, k: int = 3) -> F.Column:
         f"transform(sequence(1, greatest(size(a) - {k - 1}, 1)), "
         f"i -> concat_ws(' ', slice(a, i, {k}))))[0]"
     )
-
-
-def _size_bytes(conf_val: str) -> int:
-    """Parse a Spark byte-size conf value ('134217728b', '128m', '1g')."""
-    s = conf_val.strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            mult = m
-            s = s[: -len(suffix)]
-            break
-    return int(float(s) * mult)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -133,7 +119,7 @@ def _spread(df: DataFrame) -> DataFrame:
             return df
     files = df.inputFiles()
     if files:
-        max_split = _size_bytes(
+        max_split = conf_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
         )
         total = 0
@@ -502,13 +488,17 @@ def incremental_lsh_pairs(
     return out
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
-    """64-bit SimHash: per token hash, vote +1/-1 per bit, sign of the sum.
-    Explode + groupBy keeps it shuffle-light via partial aggregation."""
+def _simhash_votes(
+    df: DataFrame, id_col: str, text_col: str, token_hash, bits: int
+) -> DataFrame:
+    """The SimHash kernel both variants share: explode lower-cased space
+    tokens, hash each with ``token_hash(tok)``, vote +1/-1 per bit
+    (``bits`` partial-combined sums, one shuffle on the id), and set bit
+    ``j`` when its vote sum is > 0 (ties give 0)."""
     tok = _spread(df).select(
         F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
     )
-    h = tok.withColumn("h", F.xxhash64("tok"))
+    h = tok.withColumn("h", token_hash(F.col("tok")))
     votes = [
         F.sum(
             F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -522,6 +512,12 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
             F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(0)
         )
     return agg.select(id_col, sig.alias("simhash"))
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
+    """64-bit SimHash: per token hash, vote +1/-1 per bit, sign of the sum.
+    Explode + groupBy keeps it shuffle-light via partial aggregation."""
+    return _simhash_votes(df, id_col, text_col, F.xxhash64, bits)
 
 
 def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -533,33 +529,19 @@ def simhash_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     :func:`hamming_banded_pairs`'s surrogate entry could NOT oracle)
     replays in plain DuckDB SQL: ``('0x' || substr(md5(tok),1,15))::
     BIGINT`` then ``SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END)``.
-    :func:`simhash` (xxhash64) stays the production path — same plan
-    shape (explode → 60 partial-combined vote sums, one shuffle on the
-    id), md5 only costs more per token.
+    :func:`simhash` (xxhash64) stays the production path — same kernel
+    (:func:`_simhash_votes`), md5 only costs more per token.
 
     Tie votes (sum == 0) set the bit to 0 in both engines (``> 0``).
     Returns (id_col, simhash:long) with the top 4 bits always clear, so
     60 bits never touch the sign bit in either engine."""
-    bits = 60
-    tok = _spread(df).select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
+    return _simhash_votes(
+        df,
+        id_col,
+        text_col,
+        lambda tok: F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long"),
+        60,
     )
-    h = tok.withColumn(
-        "h", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(bits)
-    ]
-    agg = h.groupBy(id_col).agg(*votes)
-    sig = F.lit(0).cast("long")
-    for j in range(bits):
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(0)
-        )
-    return agg.select(id_col, sig.alias("simhash"))
 
 
 def hamming_banded_pairs(

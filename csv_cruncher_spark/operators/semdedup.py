@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .similarity import _ARGMIN_FOLD, _centroid_d2s_expr
+from .similarity import nearest_centroid_expr
 
 __all__ = [
     "quantize_vectors",
@@ -42,22 +42,18 @@ __all__ = [
     "semantic_dedup",
 ]
 
-#: integer bigint dot product of two micro-quantized vectors — exact at
-#: any summation order (every partial sum is an integer)
-_DOT_BIGINT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-    " cast(0 as bigint), (acc, v) -> acc + v)"
-)
-
-
 def _dot_bigint_expr(a: str, b: str, dim: int | None) -> str:
-    """The bigint dot as a flat UNROLLED codegen expression when ``dim``
-    is known (Spark's higher-order fold is interpreted per element and
-    dominated the pair stage — guide §1.2 per-task work). Integer sums
-    are order-independent and exact, so the unrolled form is trivially
-    bit-identical; the case guard keeps zip_with's null/length-mismatch
-    semantics on malformed rows via the legacy fold."""
-    fold = _DOT_BIGINT.format(a=a, b=b)
+    """Integer BIGINT dot product of two micro-quantized vectors — exact
+    at any summation order (every partial sum is an integer). With
+    ``dim`` known it is a flat UNROLLED codegen expression (Spark's
+    higher-order fold is interpreted per element and dominated the pair
+    stage — guide §1.2 per-task work), so the two forms are bit-identical;
+    the case guard keeps zip_with's null/length-mismatch semantics on
+    malformed rows via the fold, which is all ``dim=None`` gives."""
+    fold = (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
+        " cast(0 as bigint), (acc, v) -> acc + v)"
+    )
     if not dim or dim <= 0:
         return fold
     terms = " + ".join(f"({a}[{i}] * {b}[{i}])" for i in range(dim))
@@ -119,9 +115,7 @@ def assign_clusters(
     if centroids is None:
         centroids = seed_centroids(df, id_col, vec_col, n_clusters, micro)
     vm = quantize_vectors(df, id_col, vec_col, micro)
-    return vm.withColumn(
-        "cid", F.expr(_ARGMIN_FOLD.format(arr=_centroid_d2s_expr("_vm", centroids)))
-    )
+    return vm.withColumn("cid", nearest_centroid_expr("_vm", centroids))
 
 
 def semantic_dedup_pairs(

@@ -15,8 +15,14 @@
   The banding projection runs as an Arrow/numpy matmul pandas UDF —
   Spark's higher-order functions are interpreted, not codegen'd, and a
   batch BLAS matmul is the textbook vectorized-kernel exception to the
-  no-Python-UDF rule; a pure-JVM expression variant is kept and pinned
-  equal on real data by test.
+  no-Python-UDF rule; a test pins its keys to a sequential-fold Python
+  reference on real data.
+- **IVF** (``ivf_*``, ``knn_join``) — k-means cells, assignment as a
+  projection over centroid literals. One validity predicate
+  (:func:`_assignable`) decides which vectors train, get a cell and
+  rank, on the trained and the full-probe paths alike; one Lloyd loop
+  (:func:`_lloyd`) serves the float trainer and its fixed-point oracle
+  twin :func:`kmeans_fit_exact`.
 """
 
 from __future__ import annotations
@@ -25,15 +31,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def dot_expr(a: str, b: str) -> F.Column:
-    """Sequential-fold dot product in double precision (deterministic
-    summation order — required for oracle parity)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS double) * cast(y AS double)),"
-        " cast(0.0 AS double), (acc, v) -> acc + v)"
-    )
 
 
 # ---- unrolled (codegen) kernels -------------------------------------------
@@ -56,7 +53,10 @@ def dot_expr(a: str, b: str) -> F.Column:
 
 
 def _dot_unrolled(a: str, b: str, dim: int) -> str:
-    """Flat sequential-sum dot product (same summation order as dot_expr)."""
+    """Dot product in double precision with a deterministic sequential
+    summation order (required for oracle parity). A squared norm is
+    ``_dot_unrolled(a, a, dim)``; ``dim <= 0`` (unknown at plan time)
+    gives the interpreted fold alone."""
     fold = (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS double) * cast(y AS double)),"
         " cast(0.0 AS double), (acc, v) -> acc + v)"
@@ -72,28 +72,6 @@ def _dot_unrolled(a: str, b: str, dim: int) -> str:
     )
 
 
-def _sq_norm_unrolled(a: str, dim: int) -> str:
-    """Flat sequential sum of squares (matches aggregate(transform(a,
-    x -> x * x)) bit-for-bit; elements coerced to double like the fold)."""
-    fold = (
-        f"aggregate(transform({a}, x -> cast(x AS double) * x),"
-        " cast(0.0 AS double), (a, b) -> a + b)"
-    )
-    if dim <= 0:
-        return fold
-    terms = " + ".join(
-        f"(cast({a}[{i}] AS double) * cast({a}[{i}] AS double))" for i in range(dim)
-    )
-    return (
-        f"case when size({a}) = {dim} then cast(0.0 AS double) + {terms} "
-        f"else {fold} end"
-    )
-
-
-def norm_expr(a: str) -> F.Column:
-    return F.sqrt(dot_expr(a, a))
-
-
 def cosine_to_query(df: DataFrame, vec_col: str, query: list[float], out_col: str = "cosine") -> DataFrame:
     """Cosine similarity of every row's vector to a constant query vector.
     A zero-norm (or null) vector has no defined direction → null cosine,
@@ -105,8 +83,8 @@ def cosine_to_query(df: DataFrame, vec_col: str, query: list[float], out_col: st
     # summation order as the folds, case-guarded fallback — see the
     # unrolled-kernel note above
     dim = len(query)
-    denom = F.sqrt(F.expr(_sq_norm_unrolled(vec_col, dim))) * F.sqrt(
-        F.expr(_sq_norm_unrolled("_q", dim))
+    denom = F.sqrt(F.expr(_dot_unrolled(vec_col, vec_col, dim))) * F.sqrt(
+        F.expr(_dot_unrolled("_q", "_q", dim))
     )
     sim = F.when(denom > 0, F.expr(_dot_unrolled(vec_col, "_q", dim)) / denom)
     return df2.withColumn(out_col, sim).drop("_q")
@@ -137,10 +115,7 @@ def lsh_bucket_expr(vec_col: str, planes: np.ndarray) -> F.Column:
     bits = []
     for i, p in enumerate(planes):
         plane_lit = "array(" + ", ".join(f"cast({v!r} AS double)" for v in p) + ")"
-        d = F.expr(
-            f"aggregate(zip_with({vec_col}, {plane_lit}, (x, y) -> cast(x AS double) * y),"
-            " cast(0.0 AS double), (acc, v) -> acc + v)"
-        )
+        d = F.expr(_dot_unrolled(vec_col, plane_lit, 0))
         bits.append(F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(0))
     out = F.lit(0).cast("long")
     for b in bits:
@@ -226,46 +201,12 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
     return int(row[0]["d"])
 
 
-def banded_plane_keys_expr(vec_col: str, planes: np.ndarray, bands: int, bits: int) -> F.Column:
-    """array<long> of per-band LSH keys, as ONE compact JVM expression.
-
-    The ``bands*bits`` hyperplanes are embedded as a single
-    array<array<double>> literal (not ``bands*bits`` separate fold
-    expressions — a 40k-literal `isin` taught us Catalyst analysis cost is
-    super-linear in expression COUNT, while one big literal is cheap).
-    bit i of band b = sign(v · plane[b*bits+i]); key space per band is
-    2^bits, so bucket count scales with ``bits`` instead of being a global
-    2^n_planes constant."""
-    planes_lit = F.lit([[float(x) for x in p] for p in planes])
-    vec = F.col(vec_col)
-
-    def plane_dot(p: F.Column) -> F.Column:
-        # sequential fold, same summation order as the pure-Python twin
-        return F.aggregate(
-            F.zip_with(vec, p, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def band_key(b: F.Column) -> F.Column:
-        # MSB-first bit fold (acc*2 + bit) — avoids shiftleft-by-column,
-        # which the PySpark wrapper doesn't expose; the twin mirrors it
-        return F.aggregate(
-            F.sequence(F.lit(0), F.lit(bits - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, i: acc * 2
-            + F.when(
-                plane_dot(F.element_at(planes_lit, b * F.lit(bits) + i + F.lit(1))) > 0,
-                F.lit(1).cast("long"),
-            ).otherwise(F.lit(0).cast("long")),
-        )
-
-    return F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_key)
-
-
 def banded_plane_keys_udf(vec_col: str, planes: np.ndarray, bands: int, bits: int) -> F.Column:
-    """Arrow-vectorized variant of :func:`banded_plane_keys_expr`: the
-    bands*bits plane dots per row are one numpy matmul per Arrow batch.
+    """array<long> of per-band LSH keys: bit i of band b = sign(v ·
+    plane[b*bits+i]), MSB first (``acc*2 + bit``); key space per band is
+    2^bits, so bucket count scales with ``bits`` instead of being a
+    global 2^n_planes constant. The bands*bits plane dots per row are one
+    numpy matmul per Arrow batch.
 
     Spark's higher-order functions (aggregate/zip_with) are evaluated
     INTERPRETED, not codegen'd — at 128 planes that's ~16× the cost of
@@ -273,9 +214,9 @@ def banded_plane_keys_udf(vec_col: str, planes: np.ndarray, bands: int, bits: in
     dgemm over the batch is the textbook "vectorized numerical kernel"
     exception to the no-Python-UDF rule (brief: Pandas UDFs where
     built-ins genuinely can't express it efficiently). Sign decisions are
-    taken on float64 dots; `test_banded_keys_udf_matches_jvm_expr` pins
-    agreement with the sequential-fold JVM expression on real data (a
-    divergence needs |v·p| within ~1e-13 of 0 — measure-zero for
+    taken on float64 dots; `test_banded_keys_udf_matches_sequential_fold`
+    pins agreement with a sequential-fold Python reference on real data
+    (a divergence needs |v·p| within ~1e-13 of 0 — measure-zero for
     Gaussian planes). Rows that are null or dimension-mismatched get a
     null key array (→ no bands → never candidates), mirroring "wrong-dim
     input must not silently bucket" (round-2 verdict)."""
@@ -368,12 +309,12 @@ def pairwise_topk_within_buckets(
     va = base.select(
         F.col("id").alias("id_a"),
         F.col("v").alias("va"),
-        F.sqrt(F.expr(_sq_norm_unrolled("v", dim))).alias("__na"),
+        F.sqrt(F.expr(_dot_unrolled("v", "v", dim))).alias("__na"),
     )
     vb = base.select(
         F.col("id").alias("id_b"),
         F.col("v").alias("vb"),
-        F.sqrt(F.expr(_sq_norm_unrolled("v", dim))).alias("__nb"),
+        F.sqrt(F.expr(_dot_unrolled("v", "v", dim))).alias("__nb"),
     )
     dot = F.expr(_dot_unrolled("va", "vb", dim))
     denom = F.col("__na") * F.col("__nb")
@@ -387,6 +328,29 @@ def pairwise_topk_within_buckets(
         .filter(F.col("cosine") >= min_cosine)
     )
     return _pin(keyed, _with_dropped(out, dropped))
+
+
+def _knn_side(df: DataFrame, id_col: str, vec_col: str, tag: str, dim: int, cell: Column) -> DataFrame:
+    """One side of :func:`knn_join`: ``(__i<tag>, _<tag>v, __n<tag>,
+    __cell)`` — id, the vector as array<double>, its norm, and its cell
+    (``cell`` may read ``_<tag>v``). Only the cell differs between the
+    exact and the trained mode. A row :func:`_assignable` rejects gets a
+    null norm, so it never gets a cosine. The predicate reads the
+    squared norm the side computes anyway, in the projection: as a
+    Filter the unrolled kernel is not split into methods, and
+    knn_join_exact took 1.9 s instead of 1.4 s (500 vectors, local[2]
+    on a 4-core VM)."""
+    v, sq = f"_{tag}v", f"__sq{tag}"
+    return (
+        df.withColumn(v, F.col(vec_col).cast("array<double>"))
+        .withColumn(sq, F.expr(_dot_unrolled(v, v, dim)))
+        .select(
+            F.col(id_col).alias(f"__i{tag}"),
+            v,
+            F.when(_assignable(v, dim, F.col(sq)), F.sqrt(sq)).alias(f"__n{tag}"),
+            cell.alias("__cell"),
+        )
+    )
 
 
 def knn_join(
@@ -419,8 +383,8 @@ def knn_join(
     pair compared) — the oracle mode; production tunes recall with
     ``n_probe``. Pass pre-trained ``centroids``/``assigned`` to amortize
     across calls. Self-pairs (same id) are excluded. Ties broken by
-    ascending right id. Zero-norm/null/NaN-element vectors never rank
-    (null cosine).
+    ascending right id. Zero-norm vectors (null cosine) and the vectors
+    :func:`_assignable` rejects never rank, on either side.
 
     Returns (id_l, id_r, cosine, rank)."""
     from pyspark.sql.window import Window
@@ -435,39 +399,21 @@ def knn_join(
         # right side) are pure overhead. Cells come from a hash of the
         # right id instead (uniform equi-join keys, same join shape and
         # the same one-cell-per-right-row pair-uniqueness argument); the
-        # left side probes the constant full cell list. Null/zero-norm/
-        # mismatched/NaN-element vectors still never rank: they reach the
-        # join but their cosine is NULL (guarded denominator / fold
-        # fallback) and the isNotNull filter below drops them — the same
-        # rows the trained path drops at assignment time. Pinned against the
+        # left side probes the constant full cell list. Pinned against the
         # trained path by test_knn_exact_fastpath_matches_trained.
         try:
             dim = _infer_dim(right, vec_r)
         except ValueError:
-            dim = 0  # no usable vectors: every cosine is NULL → empty out
+            dim = 0  # no usable vectors: every norm is null or 0 → empty out
         n_cells = max(1, n_centroids)
-        l_probed = (
-            left.select(
-                F.col(id_l).alias("__il"),
-                F.col(vec_l).cast("array<double>").alias("_lv"),
-            )
-            .withColumn("__nl", F.sqrt(F.expr(_sq_norm_unrolled("_lv", dim))))
-            .withColumn(
-                "__cell", F.explode(F.expr(f"sequence(0, {n_cells - 1})"))
-            )
-        )
-        r_side = right.select(
-            F.col(id_r).alias("__ir"),
-            F.col(vec_r).cast("array<double>").alias("_rv"),
-            F.pmod(F.xxhash64(F.col(id_r)), F.lit(n_cells))
-            .cast("int")
-            .alias("__cell"),
-        ).withColumn("__nr", F.sqrt(F.expr(_sq_norm_unrolled("_rv", dim))))
+        l_cell = F.explode(F.expr(f"sequence(0, {n_cells - 1})"))
+        r_cell = F.pmod(F.xxhash64(F.col(id_r)), F.lit(n_cells)).cast("int")
     else:
         if centroids is None:
             centroids = ivf_train_centroids(right, vec_r, n_centroids=n_centroids)
         if assigned is None:
             assigned = ivf_assign(right, id_r, vec_r, centroids)
+        right = assigned
         rows = centroids.orderBy("centroid_id").collect()  # ≤ n_centroids rows
         cvecs = [list(r["centroid"]) for r in rows]
         cids = [int(r["centroid_id"]) for r in rows]
@@ -477,38 +423,24 @@ def knn_join(
         # (distance, position) structs, slice, map position → centroid id
         dists = _centroid_d2s_expr("_lv", cvecs)
         id_arr = "array(" + ", ".join(str(i) for i in cids) + ")"
-        probe_cells = F.expr(
+        l_cell = F.explode(F.expr(
             f"transform(slice(array_sort(zip_with({dists}, sequence(0, {n_cells - 1}),"
             f" (d, i) -> struct(d AS d, i AS i))), 1, {n_probe}),"
             f" s -> element_at({id_arr}, s.i + 1))"
-        )
-        # norms are per-ROW, not per-pair — computed once on each side before
-        # the join (the naive per-pair denominator tripled the fold work:
-        # measured 10.5 s → ~4 s on the sf0.1 exact entry). Norm and per-pair
-        # dot are UNROLLED codegen kernels (dim known from the collected
-        # centroids) — the interpreted fold was ~85% of the exact entry's
-        # wall; same arithmetic, same summation order, case-guarded fallback.
+        ))
+        r_cell = F.col("centroid_id")
         dim = len(cvecs[0]) if cvecs else 0
-        l_probed = (
-            left.select(
-                F.col(id_l).alias("__il"),
-                F.col(vec_l).cast("array<double>").alias("_lv"),
-            )
-            .withColumn("__nl", F.sqrt(F.expr(_sq_norm_unrolled("_lv", dim))))
-            .withColumn("__cell", F.explode(probe_cells))
-        )
-        r_side = assigned.select(
-            F.col(id_r).alias("__ir"),
-            F.col(vec_r).cast("array<double>").alias("_rv"),
-            F.col("centroid_id").alias("__cell"),
-        ).withColumn("__nr", F.sqrt(F.expr(_sq_norm_unrolled("_rv", dim))))
+    # norms are per-ROW, not per-pair — computed once on each side before
+    # the join (the naive per-pair denominator tripled the fold work:
+    # measured 10.5 s → ~4 s on the sf0.1 exact entry); a null, wrong-dim,
+    # NaN, ±Inf or overflowing vector has a null norm on either path, so
+    # it never gets a cosine (a NaN one would rank above every number)
+    l_probed = _knn_side(left, id_l, vec_l, "l", dim, l_cell)
+    r_side = _knn_side(right, id_r, vec_r, "r", dim, r_cell)
     cand = l_probed.join(r_side, "__cell").filter(F.col("__il") != F.col("__ir"))
     dot = F.expr(_dot_unrolled("_lv", "_rv", dim))
     denom = F.col("__nl") * F.col("__nr")
-    # a NaN element on either side makes its norm NaN, and Spark orders
-    # NaN above every number — ``NaN > 0`` alone let a NaN right row rank
-    # first for every left row. Such pairs get no cosine, like zero norms
-    sim = F.when((denom > 0) & ~F.isnan(denom), dot / denom)
+    sim = F.when(denom > 0, dot / denom)
     # no pair-dedup needed: every right row lives in exactly ONE cell
     # (ivf_assign is a function of the vector), so a (left, right) pair
     # can only arise from that one cell — the join output is pair-unique
@@ -571,15 +503,77 @@ def nearest_centroid_expr(vec_col: str, centroids: list[list[float]]) -> F.Colum
     return F.expr(_ARGMIN_FOLD.format(arr=_centroid_d2s_expr(vec_col, centroids)))
 
 
-def _assignable(vec_col: str, dim: int) -> Column:
-    """True for a vector the trained path can assign to a centroid: not
-    null, of the data's ``dim``, with no null or NaN element. Any other
-    row has only null/NaN centroid distances (argmin -1)."""
+def _assignable(vec_col: str, dim: int, sq_norm: Column | None = None) -> Column:
+    """THE vector-validity predicate: not null, of the data's ``dim``, and
+    a finite, non-null squared norm — which rules out null and NaN
+    elements, ±Inf and overflowing magnitudes in one test (``NaN <
+    Infinity`` is false in Spark, a null comparison filters out). Only
+    such vectors train a centroid, get a cell in :func:`ivf_assign` and
+    rank on the full-probe paths of :func:`ivf_topk` and
+    :func:`knn_join`. Pass ``sq_norm`` where the path already computes
+    the squared norm; the default is the interpreted fold, whose code
+    stays small inside a Filter (see :func:`_knn_side`)."""
+    if sq_norm is None:
+        sq_norm = F.expr(_dot_unrolled(vec_col, vec_col, 0))
     return (
         F.col(vec_col).isNotNull()
         & (F.size(vec_col) == dim)
-        & ~F.expr(f"exists({vec_col}, x -> isnull(x) or isnan(cast(x as double)))")
+        & (sq_norm < F.lit(float("inf")))
     )
+
+
+def _lloyd(
+    vecs: DataFrame,
+    vec_col: str,
+    seed_order: Column,
+    n_centroids: int,
+    iterations: int,
+    need_all_seeds: bool = False,
+) -> tuple[list[list[float]], dict[int, int]]:
+    """The Lloyd loop both k-means trainers share. ``vecs`` is pinned for
+    the seed collect and every round, then released. Seeds are the first
+    ``n_centroids`` vectors in ``seed_order`` (fewer when there are fewer
+    vectors, unless ``need_all_seeds``).
+
+    Per round: assignment is the zero-shuffle argmin projection over
+    centroid literals (:func:`nearest_centroid_expr`, strict ``<`` keeps
+    the first minimum → ties to the lowest centroid id); ONE
+    ``groupBy(cid, dim)`` sum/count — hash aggregation's map-side partial
+    combine reduces each task's output to ≤ n_centroids×dim cells, so the
+    only shuffle moves centroid-sized state — is collected, and each new
+    coordinate is the single division sum/count on the driver. An empty
+    cluster keeps its previous centroid. Returns the centroids and the
+    member counts of the last round."""
+    vecs = vecs.cache()
+    try:
+        init = vecs.orderBy(seed_order).limit(n_centroids).collect()
+        if need_all_seeds and len(init) < n_centroids:
+            raise ValueError(f"need at least {n_centroids} vectors, got {len(init)}")
+        centroids = [[float(x) for x in r[vec_col]] for r in init]
+        members: dict[int, int] = {}
+        for _ in range(iterations):
+            # cid in its own projection: beside the generator it would be
+            # evaluated once per exploded element, not once per vector
+            stats = (
+                vecs.withColumn("cid", nearest_centroid_expr(vec_col, centroids))
+                .select("cid", F.posexplode(vec_col).alias("dim", "val"))
+                .groupBy("cid", "dim")
+                .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
+                .collect()
+            )
+            by_cid: dict[int, dict[int, tuple]] = {}
+            for r in stats:
+                by_cid.setdefault(r["cid"], {})[r["dim"]] = (r["s"], r["n"])
+            members = {cid: next(iter(d.values()))[1] for cid, d in by_cid.items()}
+            centroids = [
+                [by_cid[cid][d][0] / by_cid[cid][d][1] for d in range(len(prev))]
+                if cid in by_cid
+                else prev
+                for cid, prev in enumerate(centroids)
+            ]
+    finally:
+        vecs.unpersist()
+    return centroids, members
 
 
 def ivf_train_centroids(
@@ -590,21 +584,16 @@ def ivf_train_centroids(
     sample_fraction: float | None = None,
 ) -> DataFrame:
     """IVF coarse quantizer: Lloyd k-means expressed entirely in DataFrame
-    ops (no MLlib dependency, deterministic — no random init):
+    ops (no MLlib dependency, deterministic — no random init). Seeds are
+    the n_centroids vectors whose xxhash64(vector) is smallest — a
+    deterministic pseudo-random sample of the data; the rounds are
+    :func:`_lloyd`'s (assignment is a projection, one partial-combined
+    aggregation per round, ≤ n_centroids×dim cells collected).
 
-    - init: centroids = the n_centroids vectors whose xxhash64(vector)
-      is smallest — a deterministic pseudo-random sample of the data;
-    - iterate: assignment is a PROJECTION over centroid literals (zero
-      joins/shuffles — see :func:`nearest_centroid_expr`); new centroid =
-      element-wise WEIGHTED mean per cluster via posexplode →
-      groupBy(cid, dim) sum/count — hash aggregation's map-side partial
-      combine reduces each task's output to ≤ n_centroids×dim cells, so
-      the only shuffle per round moves centroid-sized state, not data.
-      The per-round driver collect is ≤ n_centroids rows.
-
-    Only vectors :func:`ivf_assign` can place train: a null, wrong-dim
-    or NaN-element vector would otherwise seed or skew a centroid (a NaN
-    centroid has no SQL literal, so no later plan could embed it).
+    Only vectors :func:`ivf_assign` can place train (:func:`_assignable`):
+    a null, wrong-dim, NaN, ±Inf or overflowing vector would otherwise
+    seed or skew a centroid (a non-finite centroid has no SQL literal, so
+    no later plan could embed it).
 
     At 10^9 vectors, train on a sample (``sample_fraction``); assignment
     of the full set happens once in :func:`ivf_assign`.
@@ -618,34 +607,11 @@ def ivf_train_centroids(
     vecs = vecs.filter(_assignable("v", dim))
     if sample_fraction is not None:
         vecs = vecs.sample(fraction=sample_fraction, seed=42)
-    init = (
-        vecs.withColumn("_h", F.xxhash64(F.col("v").cast("array<string>")))
-        .orderBy("_h")
-        .limit(n_centroids)
-        .collect()
+    seed_order = F.xxhash64(F.col("v").cast("array<string>"))
+    centroids, _ = _lloyd(vecs, "v", seed_order, n_centroids, iterations)
+    return df.sparkSession.createDataFrame(
+        list(enumerate(centroids)), "centroid_id: int, centroid: array<double>"
     )
-    centroids = [(i, list(r["v"])) for i, r in enumerate(init)]
-    spark = df.sparkSession
-    for _ in range(iterations):
-        cvecs = [c for _, c in centroids]
-        assigned = vecs.withColumn("centroid_id", nearest_centroid_expr("v", cvecs))
-        means = (
-            assigned.select("centroid_id", F.posexplode("v").alias("dim", "val"))
-            .groupBy("centroid_id", "dim")
-            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
-            .groupBy("centroid_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", (F.col("s") / F.col("n")).alias("m")))
-                ).alias("dm")
-            )
-            .select("centroid_id", F.expr("transform(dm, x -> x.m)").alias("c"))
-            .collect()
-        )
-        new = {r["centroid_id"]: list(r["c"]) for r in means}
-        # empty cluster keeps its previous centroid
-        centroids = [(cid, new.get(cid, vec)) for cid, vec in centroids]
-    return spark.createDataFrame(centroids, "centroid_id: int, centroid: array<double>")
 
 
 def ivf_assign(df: DataFrame, id_col: str, vec_col: str, centroids: DataFrame) -> DataFrame:
@@ -656,19 +622,18 @@ def ivf_assign(df: DataFrame, id_col: str, vec_col: str, centroids: DataFrame) -
     rows = centroids.orderBy("centroid_id").collect()  # ≤ n_centroids rows
     cvecs = [list(r["centroid"]) for r in rows]
     ids = [int(r["centroid_id"]) for r in rows]
-    pos = F.expr(
-        _ARGMIN_FOLD.format(arr=_centroid_d2s_expr("_v", cvecs))
-    )
+    pos = nearest_centroid_expr("_v", cvecs)
     # map positional argmin back to centroid_id (identity when ids are
-    # 0..k-1). A null or dimension-mismatched vector yields null distances
-    # → the fold's best stays -1; emit a null centroid_id instead of
-    # letting element_at(-1+1) raise INVALID_INDEX_OF_ZERO for the row
+    # 0..k-1). The centroid_id is null exactly for the rows _assignable
+    # rejects; a valid vector whose every distance overflows to +Inf ties
+    # them all, and the first minimum is centroid position 0
     id_arr = F.array(*[F.lit(i) for i in ids])
+    valid = _assignable("_v", len(cvecs[0])) if cvecs else F.lit(False)
     return (
         df.withColumn("_v", F.col(vec_col).cast("array<double>"))
         .withColumn(
             "centroid_id",
-            F.when(pos >= 0, F.element_at(id_arr, pos + F.lit(1))),
+            F.when(valid, F.element_at(id_arr, F.greatest(pos, F.lit(0)) + F.lit(1))),
         )
         .drop("_v")
     )
@@ -694,14 +659,11 @@ def ivf_topk(
         # FULL probe without a pre-trained index (round-6, guide §1.2):
         # every inverted list is probed, so the cell partitioning cannot
         # change the output and the k-means training jobs are pure
-        # overhead. Keep the trained path's row-exclusion semantics —
-        # rows whose assignment would be NULL (null vector, wrong dim,
-        # NaN element → every centroid distance null/NaN → argmin -1)
-        # must still not reach the rerank, or a short corpus would emit
-        # null-cosine rows the trained path drops. Non-finite-but-NaN-free
-        # magnitudes (elements beyond ~1e154, ±Inf) are outside the
-        # contract either way: the trained path itself gives them
-        # centroid-dependent NaN cosines. Pinned by
+        # overhead. The rows ivf_assign would leave without a cell
+        # (_assignable: null, wrong dim, NaN/±Inf element, overflowing
+        # norm) must still not reach the rerank: a short corpus would
+        # pad with their null cosines, and a non-finite one's NaN cosine
+        # would rank first. Pinned by
         # test_ivf_topk_fullprobe_fastpath_matches_trained.
         try:
             dim = _infer_dim(df, vec_col)
@@ -755,10 +717,10 @@ def kmeans_fit_exact(
     - update: per-(centroid, dim) BIGINT sums — integer addition is
       order-independent, so shuffle order can't move a bit — and the
       new coordinate is the single double division sum/count, performed
-      identically by Spark, Python, and DuckDB. Empty clusters keep
-      their previous centroid; per round the driver collects
-      n_centroids × dim bounded rows (the accepted centroid-collect
-      pattern, same as the float path).
+      identically by Python and DuckDB. Empty clusters keep their
+      previous centroid; per round the driver collects n_centroids × dim
+      bounded rows. The rounds are :func:`_lloyd`'s, shared with the
+      float path.
 
     Scale shape per round: one codegen'd projection over the vectors +
     one partial-combined hash aggregation whose output is
@@ -767,62 +729,22 @@ def kmeans_fit_exact(
     reproducibility/audit mode. Returns (centroid_id, dim, value,
     n_members) with ``value`` in micro units and ``n_members`` from the
     final assignment (0 for a cluster empty in the last round)."""
+    from .semdedup import quantize_vectors
+
     if n_centroids <= 0 or iterations <= 0:
         raise ValueError("n_centroids and iterations must be positive")
-    vecs = df.select(
-        F.col(id_col).alias("_id"),
-        F.expr(
-            f"transform(cast({vec_col} as array<double>),"
-            f" x -> cast(floor(x * {micro}) as bigint))"
-        ).alias("vm"),
-    )
-    # cache the quantized vectors: init + every Lloyd round re-reads
-    # them (same reason bpe_train caches its vocabulary table)
-    vecs = vecs.cache()
-    init = vecs.orderBy("_id").limit(n_centroids).collect()
-    if len(init) < n_centroids:
-        vecs.unpersist()
-        raise ValueError(
-            f"need at least {n_centroids} vectors, got {len(init)}"
-        )
     # centroid coordinates live in micro units as exact-integer doubles
-    centroids: list[tuple[int, list[float]]] = [
-        (i, [float(v) for v in r["vm"]]) for i, r in enumerate(init)
-    ]
-    members: dict[int, int] = {}
-    for _ in range(iterations):
-        cvecs = [c for _, c in centroids]
-        assigned = vecs.withColumn(
-            "cid", F.expr(_ARGMIN_FOLD.format(arr=_centroid_d2s_expr("vm", cvecs)))
-        )
-        stats = (
-            assigned.select("cid", F.posexplode("vm").alias("dim", "val"))
-            .groupBy("cid", "dim")
-            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        by_cid: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in stats:
-            by_cid.setdefault(r["cid"], {})[r["dim"]] = (r["s"], r["n"])
-        members = {
-            cid: next(iter(dims.values()))[1] for cid, dims in by_cid.items()
-        }
-        centroids = [
-            (
-                cid,
-                [
-                    by_cid[cid][d][0] / by_cid[cid][d][1]
-                    for d in range(len(prev))
-                ]
-                if cid in by_cid
-                else prev,
-            )
-            for cid, prev in centroids
-        ]
-    vecs.unpersist()
+    centroids, members = _lloyd(
+        quantize_vectors(df, id_col, vec_col, micro),
+        "_vm",
+        F.col("_id"),
+        n_centroids,
+        iterations,
+        need_all_seeds=True,
+    )
     rows = [
         (cid, d + 1, vec[d], members.get(cid, 0))
-        for cid, vec in centroids
+        for cid, vec in enumerate(centroids)
         for d in range(len(vec))
     ]
     return df.sparkSession.createDataFrame(

@@ -11,6 +11,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+_UNIT_SHIFT = {"b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def conf_bytes(value: str) -> int:
+    """Bytes in a Spark byte-size conf value: a number with an optional
+    unit, spelled as Spark accepts it ('134217728b', '134217728', '128m',
+    '128mb', '1g', '1gb')."""
+    s = str(value).strip().lower()
+    if len(s) > 1 and s[-1] == "b" and s[-2] in _UNIT_SHIFT:
+        s = s[:-1]  # 'mb' → 'm'
+    if s and s[-1] in _UNIT_SHIFT:
+        return int(float(s[:-1]) * (1 << _UNIT_SHIFT[s[-1]]))
+    return int(float(s))
+
 
 def get_spark(
     app_name: str = "csv-cruncher-spark",

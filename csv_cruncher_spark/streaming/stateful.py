@@ -189,23 +189,3 @@ def lww_state_changes(
         timeoutConf=timeout_conf,
     )
 
-
-def run_lww_state_to_memory(
-    spark, batch_dir: str, table_name: str = "lww_state"
-) -> None:
-    """Drive the stateful operator over everything in ``batch_dir`` into
-    an in-memory change-feed table (test/demo harness)."""
-    from .rollup import read_change_stream
-
-    stream = read_change_stream(spark, batch_dir, max_files_per_trigger=1)
-    feed = lww_state_changes(stream)
-    q = (
-        feed.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

@@ -202,6 +202,25 @@ def _hyperplane_bucket(v: list[float], planes) -> int:
     return b
 
 
+def banded_plane_keys(v: list[float] | None, planes, bands: int, bits: int) -> list[int] | None:
+    """Twin of similarity.banded_plane_keys_udf with sequential-fold dots
+    (no BLAS): bit i of band b = sign(v · planes[b*bits+i]) summed left
+    to right from 0.0, folded MSB-first (acc*2 + bit). Null or
+    wrong-dim vectors have no keys."""
+    if v is None or len(v) != len(planes[0]):
+        return None
+    keys = []
+    for b in range(bands):
+        acc = 0
+        for i in range(bits):
+            d = 0.0
+            for x, y in zip(v, planes[b * bits + i]):
+                d += float(x) * float(y)
+            acc = acc * 2 + (1 if d > 0 else 0)
+        keys.append(acc)
+    return keys
+
+
 def embedding_near_dup_pairs(
     vecs: dict[int, list[float]],
     min_cosine: float = 0.5,

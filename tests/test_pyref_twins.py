@@ -235,26 +235,32 @@ def test_dropped_buckets_visible(spark):
     assert dedup.dropped_buckets(uncapped) is None
 
 
-def test_banded_keys_udf_matches_jvm_expr(spark):
-    """The Arrow-matmul banding UDF and the pure-JVM sequential-fold
-    expression must produce identical band keys on real data (pins that
-    BLAS summation order never flips a sign bit here)."""
-    import numpy as np
-
+def test_banded_keys_udf_matches_sequential_fold(spark):
+    """The Arrow-matmul banding UDF must produce the band keys of a
+    sequential-fold Python reference on real data (pins that BLAS
+    summation order never flips a sign bit here); null and wrong-dim
+    vectors get no keys."""
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     dim = similarity._infer_dim(emb, "embedding")
     planes = similarity._hyperplanes(dim, 4 * 16, seed=42)
+    odd = spark.createDataFrame(
+        [(10_000_001, None), (10_000_002, [1.0, 2.0])],
+        "vec_id: bigint, embedding: array<float>",
+    )
     got = (
-        emb.select(
+        emb.select("vec_id", "embedding")
+        .unionByName(odd)
+        .select(
             "vec_id",
+            "embedding",
             similarity.banded_plane_keys_udf("embedding", planes, 4, 16).alias("u"),
-            similarity.banded_plane_keys_expr("embedding", planes, 4, 16).alias("e"),
         )
         .collect()
     )
-    assert got
+    assert len(got) > 2
     for r in got:
-        assert list(r["u"]) == list(r["e"]), r["vec_id"]
+        want = pyref.banded_plane_keys(r["embedding"], planes.tolist(), 4, 16)
+        assert (None if r["u"] is None else list(r["u"])) == want, r["vec_id"]
 
 
 def test_connected_components_basic(spark):

@@ -365,9 +365,10 @@ def test_knn_exact_fastpath_matches_trained(spark):
     are compared (all of them, each exactly once), so hash-of-id cells
     must yield BIT-identical output to the trained-centroid path,
     including the degenerate rows (null vector, zero norm, wrong dim,
-    NaN element) the trained path drops at assignment time. A NaN right
-    row once ranked first for every left row on the fast path: Spark
-    orders NaN above every number, so ``NaN > 0`` let its cosine through."""
+    NaN / ±Inf element, overflowing norm) the trained path drops at
+    assignment time. A NaN or ±Inf right row once ranked first for every
+    left row on the fast path: Spark orders NaN above every number, so
+    ``NaN > 0`` let its cosine through."""
     import os as _os
 
     from csv_cruncher_spark.operators import similarity
@@ -383,10 +384,13 @@ def test_knn_exact_fastpath_matches_trained(spark):
             (10_000_002, [0.0] * 64),          # zero norm
             (10_000_003, [1.0, 2.0]),          # wrong dim
             (10_000_004, [float("nan")] + [1.0] * 63),  # NaN element
+            (10_000_005, [float("inf")] + [1.0] * 63),  # +Inf element
+            (10_000_006, [1.0] * 63 + [float("-inf")]),  # -Inf element
+            (10_000_007, [1e200] * 64),        # squared norm overflows
         ],
         "id: bigint, embedding: array<double>",
     )
-    bad = {10_000_001, 10_000_002, 10_000_003, 10_000_004}
+    bad = set(range(10_000_001, 10_000_008))
     right = emb.limit(200).unionByName(degenerate)
     left = emb.filter(F.col("id") % 25 == 0).select(
         F.col("id").alias("id_l"), "embedding"
@@ -399,7 +403,7 @@ def test_knn_exact_fastpath_matches_trained(spark):
     ).collect()
     # force the legacy trained path by passing pre-trained centroids,
     # trained on every right row: the degenerate ones must not seed or
-    # skew a centroid (a NaN one could not be planned)
+    # skew a centroid (a non-finite one could not be planned)
     cents = similarity.ivf_train_centroids(r_named, "embedding", n_centroids=8)
     trained = similarity.knn_join(
         left, r_named, "id_l", "id_r", "embedding", "embedding",
@@ -417,9 +421,10 @@ def test_knn_exact_fastpath_matches_trained(spark):
 def test_ivf_topk_fullprobe_fastpath_matches_trained(spark):
     """Round-6 pin: ivf_topk's full-probe mode skips k-means training;
     output (including the exclusion of rows whose assignment would be
-    NULL — null / wrong-dim / NaN-element vectors) must be identical to
-    the trained path, here exercised on a corpus SHORTER than k so any
-    extra null-cosine row would be visible in the tail."""
+    NULL — null / wrong-dim / NaN or ±Inf element / overflowing vectors)
+    must be identical to the trained path, here exercised on a corpus
+    SHORTER than k so any extra null-cosine row would be visible in the
+    tail, and a NaN-cosine one at the head."""
     import math as _math
     import os as _os
 
@@ -439,6 +444,9 @@ def test_ivf_topk_fullprobe_fastpath_matches_trained(spark):
             (20_000_001, None),          # null vector
             (20_000_002, [1.0, 2.0]),    # wrong dim
             (20_000_003, nan_vec),       # NaN element
+            (20_000_004, [float("inf")] + q[1:]),   # +Inf element
+            (20_000_005, q[:-1] + [float("-inf")]),  # -Inf element
+            (20_000_006, [1e200] * len(q)),          # squared norm overflows
         ],
         "vec_id: bigint, embedding: array<double>",
     )
@@ -448,17 +456,32 @@ def test_ivf_topk_fullprobe_fastpath_matches_trained(spark):
     fast = similarity.ivf_topk(
         corpus, "vec_id", "embedding", q, k=20, n_centroids=4, n_probe=4
     ).collect()
-    # train on the clean slice (k-means init on a corpus containing
-    # null / wrong-dim vectors can sample one and crash — pre-existing
-    # trained-path behavior, not under test here); what IS under test is
-    # that assignment-time exclusion of the degenerate rows matches.
-    cents = similarity.ivf_train_centroids(clean, "embedding", n_centroids=4)
+    # trained on every row: the degenerate ones must neither seed nor
+    # skew a centroid, and assignment-time exclusion must match
+    cents = similarity.ivf_train_centroids(corpus, "embedding", n_centroids=4)
     trained = similarity.ivf_topk(
         corpus, "vec_id", "embedding", q, k=20, n_centroids=4, n_probe=4,
         centroids=cents,
     ).collect()
     assert [tuple(r) for r in fast] == [tuple(r) for r in trained]
     assert len(fast) == 10  # degenerate rows excluded, not padded in
+
+    # fewer rows than n_centroids: every vector would become a seed, and
+    # an infinite one has no SQL literal for the next round's plan
+    tiny = clean.limit(2).unionByName(
+        degenerate.filter(F.col("vec_id") == 20_000_004)
+    )
+    cents = similarity.ivf_train_centroids(tiny, "embedding", n_centroids=4)
+    assert cents.count() == 2
+    fast = similarity.ivf_topk(
+        tiny, "vec_id", "embedding", q, k=20, n_centroids=4, n_probe=4
+    ).collect()
+    trained = similarity.ivf_topk(
+        tiny, "vec_id", "embedding", q, k=20, n_centroids=4, n_probe=4,
+        centroids=cents,
+    ).collect()
+    assert [tuple(r) for r in fast] == [tuple(r) for r in trained]
+    assert len(fast) == 2
 
 
 # ---------------------------------------------------------------------------

@@ -109,15 +109,19 @@ def test_row_idx_order_correct_under_split_parallel_read(spark, change_log):
 def test_read_change_batch_rejects_oversized_splits(spark, change_log):
     """The row_idx gap math assumes <= 1M lines per split; the reader must
     refuse a session configured past the 128 MiB bound rather than
-    silently mis-ordering LWW ties on tombstone-heavy batches."""
+    silently mis-ordering LWW ties on tombstone-heavy batches. Every
+    unit spelling Spark accepts is read ('128mb' is the bound itself)."""
     from csv_cruncher_spark.cdc.pipeline import read_change_batch
 
     _d, paths = change_log
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-        with pytest.raises(ValueError, match="maxPartitionBytes"):
-            read_change_batch(spark, paths[0])
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "128mb")
+        read_change_batch(spark, paths[0])
+        for oversized in ("512m", "1gb"):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", oversized)
+            with pytest.raises(ValueError, match="maxPartitionBytes"):
+                read_change_batch(spark, paths[0])
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
