@@ -163,6 +163,19 @@ def batch_meta(path: str) -> dict:
     return {}
 
 
+def discover_batches(
+    batch_dir: str, include: str | None = None, exclude: str | None = None
+) -> list[str]:
+    """The change batches under ``batch_dir`` in replay order: ``.csv`` and
+    ``.json`` files (not ``.meta.json`` sidecars), filtered, sorted."""
+    files = [
+        os.path.join(batch_dir, f)
+        for f in os.listdir(batch_dir)
+        if f.endswith((".csv", ".json")) and not f.endswith(".meta.json")
+    ]
+    return sorted(filter_paths(files, include, exclude))
+
+
 _EVENT_META_COLS = {"op", "row_idx"}
 
 
@@ -295,14 +308,6 @@ class CdcPipeline:
 
     # ---------- replay ----------
 
-    def discover(self, batch_dir: str, include: str | None = None, exclude: str | None = None) -> list[str]:
-        files = [
-            os.path.join(batch_dir, f)
-            for f in os.listdir(batch_dir)
-            if f.endswith((".csv", ".json")) and not f.endswith(".meta.json")
-        ]
-        return sorted(filter_paths(files, include, exclude))
-
     def run(
         self,
         spark: SparkSession,
@@ -316,7 +321,7 @@ class CdcPipeline:
         table = self.ensure_table()
         ckpt = self.load_checkpoint()
         applied = set(ckpt["batches_applied"])
-        batches = self.discover(batch_dir, include, exclude)
+        batches = discover_batches(batch_dir, include, exclude)
         done = 0
         for path in batches:
             batch_id = os.path.basename(path)

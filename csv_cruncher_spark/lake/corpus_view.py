@@ -18,8 +18,11 @@ in exactly one bucket and election is bucket-local. A refresh touches
 only the buckets containing fingerprints present in the epoch range's
 change feed (old image AND new image, so moves between groups update
 both sides), rewrites those buckets with flags recomputed, and
-atomically swaps a state pointer — write-new + rename, the lake's
-crash discipline; refresh is idempotent per epoch.
+publishes the new bucket map through the store every maintained view
+shares (``lake.view_store``: fsynced pointer swap, the lake's crash
+discipline). Bootstrap and refresh are that module's epoch loop; only
+the fold — the bucket-scoped rewrite and the near-dup screen — is this
+class's own, and refresh is idempotent per epoch.
 
 Deliberately NOT supported: ``temperature=`` mixing — its per-stratum
 fractions depend on the global histogram, so a single changed row can
@@ -51,19 +54,18 @@ full rebuild/bootstrap.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import sampling, textstats
+from . import view_store
+from .view_store import EpochView
 
 __all__ = ["MaintainedCorpus"]
 
 
-class MaintainedCorpus:
+class MaintainedCorpus(EpochView):
     def __init__(
         self,
         table_path: str,
@@ -96,32 +98,6 @@ class MaintainedCorpus:
         self.n_hashes = n_hashes
         self.lsh_bands = lsh_bands
         self.shingle_k = shingle_k
-
-    # -- state -----------------------------------------------------------
-    def _state_file(self) -> str:
-        return os.path.join(self.store_path, "state.json")
-
-    def state(self) -> dict | None:
-        if not os.path.exists(self._state_file()):
-            return None
-        with open(self._state_file()) as f:
-            return json.load(f)
-
-    def _swap_state(self, new_state: dict, prev: dict | None) -> None:
-        os.makedirs(self.store_path, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.store_path, suffix=".json")
-        with os.fdopen(fd, "w") as f:
-            json.dump(new_state, f)
-        os.replace(tmp, self._state_file())
-        # prune member versions no longer referenced by current or the
-        # immediately previous state (a reader holding the old pointer
-        # may still be scanning)
-        keep = {p.split("/")[0] for p in new_state["buckets"].values()}
-        if prev is not None:
-            keep |= {p.split("/")[0] for p in prev["buckets"].values()}
-        for name in os.listdir(self.store_path):
-            if name.startswith("m-") and name not in keep:
-                shutil.rmtree(os.path.join(self.store_path, name), ignore_errors=True)
 
     # -- plan pieces -------------------------------------------------------
     def _gate_members(self, df: DataFrame, keep_text: bool = False) -> DataFrame:
@@ -217,14 +193,7 @@ class MaintainedCorpus:
         pairs = _dedup.lsh_candidate_pairs(
             sigs, "url", self.n_hashes, self.lsh_bands
         )
-        a = sigs.select(F.col("url").alias("id_a"), F.col("signature").alias("sig_a"))
-        b = sigs.select(F.col("url").alias("id_b"), F.col("signature").alias("sig_b"))
-        est = F.expr(
-            "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / size(sig_a)"
-        )
-        scored = pairs.join(a, "id_a").join(b, "id_b").select(
-            "id_a", "id_b", est.alias("est_jaccard")
-        )
+        scored = _dedup._minhash_rerank(pairs, sigs, sigs, "url", "id_a", "id_b")
         return self._cross_fp_rejects(
             scored, "est_jaccard", "id_b", "id_a", fps, self.near_dup_jaccard
         )
@@ -267,11 +236,7 @@ class MaintainedCorpus:
         return written
 
     def _read_buckets(self, spark: SparkSession, bucket_ids=None) -> DataFrame:
-        st = self.state()
-        if st is None:
-            raise ValueError(
-                f"no maintained corpus at {self.store_path}; bootstrap first"
-            )
+        st = view_store.require_state(self.store_path, "corpus", "bootstrap first")
         paths = [
             os.path.join(self.store_path, p)
             for b, p in st["buckets"].items()
@@ -286,16 +251,12 @@ class MaintainedCorpus:
         )
 
     # -- lifecycle ---------------------------------------------------------
-    def bootstrap(self, spark: SparkSession) -> int:
-        """Full-scan initialization at the table's current epoch. With
-        ``near_dup`` the bootstrap also collapses pre-existing cross-fp
-        near-dup groups (reject any member near-dupping a smaller url —
-        the refresh screen's precedence rule, applied once to the full
-        corpus) and stores every member's signature."""
-        from .table import LakeTable
-
-        table = LakeTable.load(self.table_path)
-        epoch = table.snapshot()["epoch_id"]
+    def _build(self, spark: SparkSession, table, epoch: int) -> None:
+        """Full-scan initialization. With ``near_dup`` the bootstrap also
+        collapses pre-existing cross-fp near-dup groups (reject any member
+        near-dupping a smaller url — the refresh screen's precedence rule,
+        applied once to the full corpus) and stores every member's
+        signature."""
         members = self._gate_members(table.read(spark), keep_text=self.near_dup)
         raw = sigs = None
         if self.near_dup:
@@ -307,31 +268,19 @@ class MaintainedCorpus:
             )
         decorated = self._decorate(members)
         buckets = self._write_buckets(decorated, epoch)
-        prev = self.state()
-        state = {"epoch": epoch, "n_buckets": self.n_buckets, "buckets": buckets}
-        if self.near_dup:
-            state["near_dup"] = self._near_cfg()
-        self._swap_state(state, prev)
         if sigs is not None:
             sigs.unpersist()
             raw.unpersist()
-        return epoch
+        state = {"epoch": epoch, "n_buckets": self.n_buckets, "buckets": buckets}
+        if self.near_dup:
+            state["near_dup"] = self._near_cfg()
+        view_store.publish(self.store_path, state, "m-")
 
-    def refresh(self, spark: SparkSession) -> int:
-        """Fold every epoch committed since the last refresh; returns the
-        epoch now reflected. First call bootstraps; nothing-new is a
-        no-op. Cost: feed-sized work + a rewrite of ONLY the buckets
-        whose fingerprint groups the feed touches (old or new image)."""
-        st = self.state()
-        if st is None:
-            return self.bootstrap(spark)
-        from .table import LakeTable
-
-        table = LakeTable.load(self.table_path)
-        cur = table.snapshot()["epoch_id"]
-        last = st["epoch"]
-        if cur == last:
-            return last
+    def _fold(
+        self, spark: SparkSession, table, st: dict, feed: DataFrame, cur: int
+    ) -> None:
+        """Cost: feed-sized work + a rewrite of ONLY the buckets whose
+        fingerprint groups the feed touches (old or new image)."""
         # the store's bucketing is fixed at bootstrap — a constructor
         # passed a different n_buckets must not split fingerprint groups
         # across two schemes; same for the near-dup sketch config
@@ -340,9 +289,7 @@ class MaintainedCorpus:
         # the feed feeds THREE consumers (touched-fp collect, changed-url
         # anti join, gated additions) — persist it or each re-executes
         # the delta discovery and both keyed endpoint reads
-        feed = table.changes_between(
-            spark, from_epoch=last, to_epoch=cur, with_before=True
-        ).persist()
+        feed = feed.persist()
         fp_new = textstats.normalized_fingerprint("text")
         fp_old = textstats.normalized_fingerprint("__before.text")
         touched_fp = (
@@ -366,8 +313,8 @@ class MaintainedCorpus:
             # feed had only rows with no gate-relevant images (possible
             # when every change is a delete of a never-inserted key)
             feed.unpersist()
-            self._swap_state({**st, "epoch": cur}, st)
-            return cur
+            view_store.publish(self.store_path, {**st, "epoch": cur}, "m-")
+            return
         changed_urls = feed.select("url").distinct()
         stored = self._read_buckets(spark, affected)
         survivors = (
@@ -443,8 +390,9 @@ class MaintainedCorpus:
             new_buckets.pop(str(b), None)
         new_buckets.update(written)
         # {**st, ...} keeps bootstrap-time config (near_dup sketch params)
-        self._swap_state({**st, "epoch": cur, "buckets": new_buckets}, st)
-        return cur
+        view_store.publish(
+            self.store_path, {**st, "epoch": cur, "buckets": new_buckets}, "m-"
+        )
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The selected corpus: (url, lang, fp, split) of every keeper

@@ -24,6 +24,12 @@ aggregate's own size. For an aggregate too large to rewrite,
 can upsert the touched groups into a keyed store (e.g. a second
 ``LakeTable``) instead of folding into a full frame.
 
+Durable views: :class:`MaintainedAggregate` and every view built on it
+(:class:`MaintainedExtrema`, the HLL sketch, vocabulary and link-graph
+views) persist through :mod:`.view_store` — one crash-safe state pointer
+— and refresh through its one bootstrap/refresh loop; each class supplies
+only its aggregate algebra (``_compute``/``_apply``).
+
 The reference engine has no incremental layer at all — every query
 recomputes from the freshly imported tables
 (/root/reference/src/main/kotlin/cz/dynawest/csvcruncher/Cruncher.kt:59);
@@ -49,6 +55,9 @@ checks):
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from . import view_store
+from .view_store import EpochView
 
 
 def diff_states(pre: DataFrame, post: DataFrame, key: str) -> DataFrame:
@@ -250,7 +259,7 @@ def apply_changes_to_agg(
     return out.select(*group_cols, *fixed)
 
 
-class MaintainedAggregate:
+class MaintainedAggregate(EpochView):
     """A durable, incrementally-maintained aggregate over a
     :class:`~csv_cruncher_spark.lake.table.LakeTable` — the piece that
     turns the primitives above into an operational materialized view:
@@ -258,14 +267,11 @@ class MaintainedAggregate:
     table (``tailer.poll_once(spark); mv.refresh(spark)``) at
     O(changed keys) per poll, never a table scan after bootstrap.
 
-    Persistence is a tiny manifest of its own: each refresh writes the
-    updated aggregate as a NEW parquet directory named by the epoch it
-    reflects, then atomically swaps ``state.json`` to point at it
-    (write-new + rename, the same crash discipline as the lake). A
-    crash between the two leaves the previous state fully intact, and
-    re-running the refresh regenerates the orphan deterministically —
-    refresh is idempotent per epoch, so the tailer loop can call it
-    unconditionally.
+    Persistence and the refresh loop are :mod:`.view_store`'s: each
+    refresh writes the updated aggregate as a NEW parquet dir
+    ``agg-<epoch>``, then durably swaps ``state.json`` to it. Subclasses
+    change only the aggregate algebra, through ``_compute`` (bootstrap)
+    and ``_apply`` (one feed).
 
     ``derives`` handles measures that are functions of payload columns
     rather than stored columns (e.g. text length): each expression is
@@ -289,68 +295,20 @@ class MaintainedAggregate:
         self.count_col = count_col
         self.derives = derives or {}
 
-    # -- state ---------------------------------------------------------
-    def _state_file(self) -> str:
-        import os
-
-        return os.path.join(self.store_path, "state.json")
-
-    def state(self) -> dict | None:
-        import json
-        import os
-
-        if not os.path.exists(self._state_file()):
-            return None
-        with open(self._state_file()) as f:
-            return json.load(f)
-
     def _persist(self, agg: DataFrame, epoch: int) -> None:
-        import json
-        import os
-        import tempfile
-
-        os.makedirs(self.store_path, exist_ok=True)
-        prev = self.state()
-        data_dir = os.path.join(self.store_path, f"agg-{epoch:08d}")
-        agg.write.mode("overwrite").parquet(data_dir)
-        fd, tmp = tempfile.mkstemp(dir=self.store_path, suffix=".json")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"epoch": epoch, "data": os.path.basename(data_dir)}, f)
-        os.replace(tmp, self._state_file())  # atomic pointer swap
-        # prune superseded aggregate versions (keep current + previous —
-        # a reader that resolved the old pointer may still be scanning)
-        import shutil
-
-        keep = {os.path.basename(data_dir)}
-        if prev is not None:
-            keep.add(prev["data"])
-        for name in os.listdir(self.store_path):
-            if name.startswith("agg-") and name not in keep:
-                shutil.rmtree(
-                    os.path.join(self.store_path, name), ignore_errors=True
-                )
+        view_store.publish_frame(self.store_path, agg, "agg-", epoch, epoch=epoch)
 
     def read(self, spark) -> DataFrame:
-        import os
+        return view_store.read_frame(
+            spark, self.store_path, "aggregate", "call refresh() (or bootstrap()) first"
+        )
 
-        st = self.state()
-        if st is None:
-            raise ValueError(
-                f"no maintained aggregate at {self.store_path}; "
-                "call refresh() (or bootstrap()) first"
-            )
-        return spark.read.parquet(os.path.join(self.store_path, st["data"]))
-
-    # -- maintenance ----------------------------------------------------
     def _prepared_state(self, table, spark) -> DataFrame:
         df = table.read(spark)
         for name, fn in self.derives.items():
             df = df.withColumn(name, fn(lambda c: F.col(c)))
         return df
 
-    # the two maintenance steps are overridable so sibling views (e.g.
-    # :class:`MaintainedExtrema`) reuse the store/refresh machinery with
-    # different aggregate algebra
     def _compute(self, state_df: DataFrame) -> DataFrame:
         return compute_agg(
             state_df, self.group_cols, self.sums, count_col=self.count_col
@@ -361,46 +319,19 @@ class MaintainedAggregate:
             agg, feed, self.group_cols, self.sums, count_col=self.count_col
         )
 
-    def bootstrap(self, spark) -> int:
-        """Full-scan initialization at the table's current epoch."""
-        from .table import LakeTable
+    def _build(self, spark, table, epoch: int) -> None:
+        self._persist(self._compute(self._prepared_state(table, spark)), epoch)
 
-        table = LakeTable.load(self.table_path)
-        epoch = table.snapshot()["epoch_id"]
-        agg = self._compute(self._prepared_state(table, spark))
-        self._persist(agg, epoch)
-        return epoch
-
-    def refresh(self, spark) -> int:
-        """Fold every epoch committed since the last refresh into the
-        stored aggregate; returns the epoch now reflected. First call
-        bootstraps; a call with nothing new is a cheap no-op."""
-        from .table import LakeTable
-
-        st = self.state()
-        if st is None:
-            return self.bootstrap(spark)
-        table = LakeTable.load(self.table_path)
-        cur = table.snapshot()["epoch_id"]
-        last = st["epoch"]
-        if cur == last:
-            return last
-        feed = table.changes_between(
-            spark, from_epoch=last, to_epoch=cur, with_before=True
-        )
+    def _fold(self, spark, table, st: dict, feed: DataFrame, cur: int) -> None:
         if self.derives:
             feed = derive(feed, **self.derives)
-        agg = self._apply(self.read(spark), feed, table, spark)
-        self._persist(agg, cur)
-        return cur
+        self._persist(self._apply(self.read(spark), feed, table, spark), cur)
 
 
 class MaintainedExtrema(MaintainedAggregate):
     """Durable incrementally-maintained MIN/MAX view — the
-    :class:`MaintainedAggregate` store/refresh machinery (epoch-named
-    parquet versions, atomic pointer swap, idempotent per-epoch refresh,
-    tailer-loop compatible) with :func:`apply_changes_to_minmax` as the
-    maintenance step. Each refresh folds insertions with
+    :class:`MaintainedAggregate` store and refresh loop with
+    :func:`apply_changes_to_minmax` as the maintenance step. Each refresh folds insertions with
     least/greatest and re-aggregates only the groups whose stored
     extremum was retracted, reading the table through ONE semi-join on
     those group keys — after bootstrap there is never an unconditional

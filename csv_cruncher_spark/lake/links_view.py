@@ -19,6 +19,10 @@ equivalence suite (tests/test_links_view.py) pins maintained ≡
 ``extract_outlinks(table.read())`` after every refresh, including edge
 death on delete and edge replacement on update.
 
+Durability and the bootstrap/refresh loop are the shared ones of
+``lake.view_store`` (through ``ivm.MaintainedAggregate``); this module
+adds only the keyed-replacement fold.
+
 The reference engine re-imports and recomputes per run
 (``Cruncher.kt:59``); this is part of the from-scratch incremental
 surface the north rule asks for.
@@ -72,13 +76,13 @@ def apply_links_delta(
 
 class MaintainedLinkGraph(MaintainedAggregate):
     """Durable incrementally-maintained link graph over a
-    :class:`~csv_cruncher_spark.lake.table.LakeTable` — the operational
-    contract of :class:`~csv_cruncher_spark.lake.ivm.MaintainedAggregate`
-    (epoch-named parquet versions behind an atomically-swapped pointer,
-    idempotent per epoch, tailer-loop compatible), with the maintained
-    frame being the (src, dst) outlink edge list. Pre-images are NOT
-    requested from the feed — keyed replacement needs only the post
-    side."""
+    :class:`~csv_cruncher_spark.lake.table.LakeTable` — the store and
+    refresh loop of :class:`~csv_cruncher_spark.lake.ivm.MaintainedAggregate`,
+    with the maintained frame being the (src, dst) outlink edge list.
+    Pre-images are NOT requested from the feed — keyed replacement needs
+    only the post side."""
+
+    feed_preimages = False
 
     def __init__(
         self,
@@ -91,31 +95,8 @@ class MaintainedLinkGraph(MaintainedAggregate):
         self.url_col = url_col
         self.html_col = html_col
 
-    def bootstrap(self, spark) -> int:
-        from .table import LakeTable
+    def _compute(self, state_df: DataFrame) -> DataFrame:
+        return compute_link_graph(state_df, self.url_col, self.html_col)
 
-        table = LakeTable.load(self.table_path)
-        epoch = table.snapshot()["epoch_id"]
-        edges = compute_link_graph(
-            table.read(spark), self.url_col, self.html_col
-        )
-        self._persist(edges, epoch)
-        return epoch
-
-    def refresh(self, spark) -> int:
-        from .table import LakeTable
-
-        st = self.state()
-        if st is None:
-            return self.bootstrap(spark)
-        table = LakeTable.load(self.table_path)
-        cur = table.snapshot()["epoch_id"]
-        last = st["epoch"]
-        if cur == last:
-            return last
-        feed = table.changes_between(spark, from_epoch=last, to_epoch=cur)
-        edges = apply_links_delta(
-            self.read(spark), feed, self.url_col, self.html_col
-        )
-        self._persist(edges, cur)
-        return cur
+    def _apply(self, agg: DataFrame, feed: DataFrame, table, spark) -> DataFrame:
+        return apply_links_delta(agg, feed, self.url_col, self.html_col)

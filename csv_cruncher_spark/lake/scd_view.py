@@ -19,28 +19,27 @@ One change log, two materializations:
   t"), whose ``is_current`` slice agrees with the table (cross-checked
   in tests).
 
-Operational contract (the maintained-view family discipline —
-``ivm.MaintainedAggregate``): each applied batch writes the updated
-history as a NEW epoch-named parquet directory, then atomically swaps
-``state.json`` (write-new + rename); a crash between the two leaves
-the previous state intact and the re-run regenerates the orphan —
-apply is idempotent per batch id, so the tailer loop calls ``run``
-unconditionally. Cost per batch is ``scd2_apply``'s contract: the
-stored history passes through broadcast anti/semi joins on the batch's
-key set and never shuffles; only touched keys re-sort.
+Operational contract: the store is the one every maintained view shares
+(``lake.view_store``) — each applied batch writes the updated history
+as a NEW sequence-named parquet dir ``hist-<seq>``, then durably swaps
+``state.json`` to it; a crash between the two leaves the previous
+state intact and the re-run regenerates the orphan. Apply is idempotent
+per batch id, so the tailer loop calls ``run`` unconditionally; ``run``
+finds batches with the pipeline's own ``discover_batches``. Cost per
+batch is ``scd2_apply``'s contract: the stored history passes through
+broadcast anti/semi joins on the batch's key set and never shuffles;
+only touched keys re-sort.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scd import scd2_history, scd2_apply
+from . import view_store
 
 __all__ = ["MaintainedScd2"]
 
@@ -65,50 +64,20 @@ class MaintainedScd2:
         )
         self.collapse_unchanged = collapse_unchanged
 
-    # -- state ----------------------------------------------------------
-    def _state_file(self) -> str:
-        return os.path.join(self.store_path, "state.json")
-
     def state(self) -> dict | None:
-        if not os.path.exists(self._state_file()):
-            return None
-        with open(self._state_file()) as f:
-            return json.load(f)
+        return view_store.read_state(self.store_path)
 
     def _persist(self, hist: DataFrame, applied: list[str]) -> None:
-        os.makedirs(self.store_path, exist_ok=True)
         prev = self.state()
         seq = (prev["seq"] + 1) if prev else 0
-        data_dir = os.path.join(self.store_path, f"hist-{seq:08d}")
-        hist.write.mode("overwrite").parquet(data_dir)
-        fd, tmp = tempfile.mkstemp(dir=self.store_path, suffix=".json")
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {
-                    "seq": seq,
-                    "data": os.path.basename(data_dir),
-                    "batches_applied": applied,
-                },
-                f,
-            )
-        os.replace(tmp, self._state_file())  # atomic pointer swap
-        keep = {os.path.basename(data_dir)}
-        if prev is not None:
-            keep.add(prev["data"])
-        for name in os.listdir(self.store_path):
-            if name.startswith("hist-") and name not in keep:
-                shutil.rmtree(
-                    os.path.join(self.store_path, name), ignore_errors=True
-                )
+        view_store.publish_frame(
+            self.store_path, hist, "hist-", seq, seq=seq, batches_applied=applied
+        )
 
     def read(self, spark: SparkSession) -> DataFrame:
-        st = self.state()
-        if st is None:
-            raise ValueError(
-                f"no maintained history at {self.store_path}; apply a "
-                "batch (run/apply_batch) first"
-            )
-        return spark.read.parquet(os.path.join(self.store_path, st["data"]))
+        return view_store.read_frame(
+            spark, self.store_path, "history", "apply a batch (run/apply_batch) first"
+        )
 
     def current(self, spark: SparkSession) -> DataFrame:
         """The LWW current-state slice of the history (what the lake
@@ -180,15 +149,9 @@ class MaintainedScd2:
         current slice MINUS gated keys" (asserted exactly that way in
         tests/test_warehouse_cycle_integration.py). Returns the
         resulting state manifest."""
-        from ..cdc.pipeline import read_change_batch
-        from ..sources.discovery import filter_paths
+        from ..cdc.pipeline import discover_batches, read_change_batch
 
-        files = sorted(
-            os.path.join(batch_dir, f)
-            for f in os.listdir(batch_dir)
-            if f.endswith((".csv", ".json")) and not f.endswith(".meta.json")
-        )
-        files = sorted(filter_paths(files, include, exclude))
+        files = discover_batches(batch_dir, include, exclude)
         applied = set((self.state() or {}).get("batches_applied", []))
         done = 0
         for path in files:

@@ -17,9 +17,10 @@ Register death (count reaching 0) drops the row, matching a fresh
 ``hll_build`` exactly — the maintained registers are BIT-EQUAL to a
 recompute after every refresh, which the tests assert batch by batch.
 
-Same durability contract as every maintained view here (epoch-named
-parquet versions behind an atomically-swapped ``state.json`` pointer,
-idempotent per epoch, tailer-loop compatible). Estimation reuses
+Same store and refresh loop as every maintained view here
+(``lake.view_store``: epoch-named parquet versions behind a durably
+swapped ``state.json`` pointer, idempotent per epoch, tailer-loop
+compatible). Estimation reuses
 ``operators.sketch.hll_estimate`` unchanged.
 
 Provenance: the reference engine (csv-cruncher) has no sketch or

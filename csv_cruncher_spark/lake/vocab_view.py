@@ -21,6 +21,10 @@ equivalence suite (tests/test_vocab_view.py) pins maintained ≡
 recompute after every refresh, including token death (tf → 0) and df
 decrement on content updates.
 
+Durability and the bootstrap/refresh loop are the shared ones of
+``lake.view_store`` (through ``ivm.MaintainedAggregate``); this module
+adds only the token algebra.
+
 The reference engine recomputes every query from freshly imported
 tables (``Cruncher.kt:59``); this is part of the from-scratch
 incremental surface the north rule asks for.
@@ -125,13 +129,10 @@ def apply_vocab_delta(vocab: DataFrame, delta: DataFrame) -> DataFrame:
 
 class MaintainedVocabulary(MaintainedAggregate):
     """Durable incrementally-maintained vocabulary over a
-    :class:`~csv_cruncher_spark.lake.table.LakeTable` — same operational
-    contract as :class:`~csv_cruncher_spark.lake.ivm.MaintainedAggregate`
-    (epoch-named parquet versions behind an atomically-swapped pointer,
-    idempotent per epoch, pair with the tailer loop), with the
-    aggregate being the exploded-token (tf, df) table instead of a
-    row-level groupBy. Reuses the parent's persistence verbatim;
-    bootstrap/refresh are overridden for the token granularity."""
+    :class:`~csv_cruncher_spark.lake.table.LakeTable` — the store and
+    refresh loop of :class:`~csv_cruncher_spark.lake.ivm.MaintainedAggregate`,
+    with the aggregate being the exploded-token (tf, df) table instead of
+    a row-level groupBy: only ``_compute``/``_apply`` are its own."""
 
     def __init__(
         self,
@@ -148,32 +149,9 @@ class MaintainedVocabulary(MaintainedAggregate):
         self.text_col = text_col
         self.pattern = pattern
 
-    def bootstrap(self, spark) -> int:
-        from .table import LakeTable
+    def _compute(self, state_df: DataFrame) -> DataFrame:
+        return compute_vocab(state_df, self.id_col, self.text_col, self.pattern)
 
-        table = LakeTable.load(self.table_path)
-        epoch = table.snapshot()["epoch_id"]
-        vocab = compute_vocab(
-            table.read(spark), self.id_col, self.text_col, self.pattern
-        )
-        self._persist(vocab, epoch)
-        return epoch
-
-    def refresh(self, spark) -> int:
-        from .table import LakeTable
-
-        st = self.state()
-        if st is None:
-            return self.bootstrap(spark)
-        table = LakeTable.load(self.table_path)
-        cur = table.snapshot()["epoch_id"]
-        last = st["epoch"]
-        if cur == last:
-            return last
-        feed = table.changes_between(
-            spark, from_epoch=last, to_epoch=cur, with_before=True
-        )
+    def _apply(self, agg: DataFrame, feed: DataFrame, table, spark) -> DataFrame:
         delta = vocab_delta(feed, self.id_col, self.text_col, self.pattern)
-        vocab = apply_vocab_delta(self.read(spark), delta)
-        self._persist(vocab, cur)
-        return cur
+        return apply_vocab_delta(agg, delta)

@@ -281,15 +281,31 @@ def minhash_dedup_pairs(
     first); their band buckets are dropped here to bound the self-join."""
     sig = minhash_signatures(df, id_col, text_col, n_hashes, shingle_k)
     pairs = lsh_candidate_pairs(sig, id_col, n_hashes, bands, max_bucket)
-    a = sig.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
-    b = sig.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
-    est = F.expr(
-        "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / size(sig_a)"
-    )
-    out = (
-        pairs.join(a, "id_a").join(b, "id_b").select("id_a", "id_b", est.alias("est_jaccard"))
-    )
+    out = _minhash_rerank(pairs, sig, sig, id_col, "id_a", "id_b")
     return _pin(sig, _with_dropped(out, dropped_buckets(pairs)))
+
+
+def _minhash_rerank(
+    pairs: DataFrame,
+    left_sigs: DataFrame,
+    right_sigs: DataFrame,
+    id_col: str,
+    left: str,
+    right: str,
+) -> DataFrame:
+    """The rerank step every MinHash path shares: join candidate
+    ``pairs`` (``left``, ``right``) to both sides' ``signature`` arrays
+    from (``id_col``, ``signature``) frames and attach ``est_jaccard``,
+    the fraction of matching minima — a double division of two ints, so
+    k/n is an exact binary fraction when n is a power of two. Returns
+    (``left``, ``right``, est_jaccard)."""
+    a = left_sigs.select(F.col(id_col).alias(left), F.col("signature").alias("__sig_l"))
+    b = right_sigs.select(F.col(id_col).alias(right), F.col("signature").alias("__sig_r"))
+    est = F.expr(
+        "size(filter(zip_with(__sig_l, __sig_r, (x, y) -> x = y), v -> v))"
+        " / size(__sig_l)"
+    )
+    return pairs.join(a, left).join(b, right).select(left, right, est.alias("est_jaccard"))
 
 
 def minhash_md5_signatures(
@@ -364,25 +380,10 @@ def minhash_md5_pairs(
         ).alias("band", "band_key"),
     )
     pairs, dropped = _capped_self_pairs(banded, "band_key", max_bucket)
-    a = sig.select(
-        F.col("id").alias("id_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(n_hashes)]
+    arr = sig.select(
+        "id", F.array(*[F.col(f"mh{i}") for i in range(n_hashes)]).alias("signature")
     )
-    b = sig.select(
-        F.col("id").alias("id_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n_hashes)]
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
-    out = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (matches / F.lit(float(n_hashes))).alias("est_jaccard"),
-        )
-    )
+    out = _minhash_rerank(pairs, arr, arr, "id", "id_a", "id_b")
     return _pin(sig, _with_dropped(out, dropped))
 
 
@@ -470,16 +471,7 @@ def incremental_lsh_pairs(
         .select(F.col("b.id").alias("batch_id"), F.col("c.id").alias("corpus_id"))
         .distinct()
     )
-    sb = batch_sigs.select(F.col(id_col).alias("batch_id"), F.col("signature").alias("sig_b"))
-    sc = corpus_sigs.select(F.col(id_col).alias("corpus_id"), F.col("signature").alias("sig_c"))
-    est = F.expr(
-        "size(filter(zip_with(sig_b, sig_c, (x, y) -> x = y), v -> v)) / size(sig_b)"
-    )
-    out = (
-        pairs.join(sb, "batch_id")
-        .join(sc, "corpus_id")
-        .select("batch_id", "corpus_id", est.alias("est_jaccard"))
-    )
+    out = _minhash_rerank(pairs, batch_sigs, corpus_sigs, id_col, "batch_id", "corpus_id")
     out = _with_dropped(out, dropped)
     if own_batch_sigs:
         out = _pin(batch_sigs, out)
